@@ -108,19 +108,12 @@ def headline_queries() -> dict:
               "txt_chunk", "txt_pack_sequences", "join_bloom",
               "txt_classify", "txt_boilerplate",
               "evt_retention", "agg_histogram", "kg_turtle",
-              # round-5 batch: image perceptual-hash dedup (encode + dHash
-              # mapInPandas + banded Hamming join), multi-probe LSH ANN
-              # (Hamming-1/2 bucket expansion join), the TRAINED quality
-              # classifier (broadcast weight lookup + margin agg), the
-              # full-outer reconciliation join, the pivot reshape, and
-              # JPEG decode now that it carries the full integer-IDCT
-              # pixel certification per blob
-              "mm_phash_pairs", "ann_lsh_multiprobe",
+              # round-5 batch: multi-probe LSH ANN (Hamming-1/2 bucket
+              # expansion join), the TRAINED quality classifier
+              # (broadcast weight lookup + margin agg), the full-outer
+              # reconciliation join and the pivot reshape
+              "ann_lsh_multiprobe",
               "txt_classify_trained", "join_full", "agg_pivot",
-              "mm_decode_jpeg",
-              # audio-fingerprint near-dup (WAV encode + energy-delta
-              # fingerprint + the same banded Hamming join as phash)
-              "mm_afp_pairs",
               # closing round-5 batch: conversion attribution (two RANGE
               # frames over one user_id sort — the widest window shape in
               # the event family), whole-bit token entropy (explode +
@@ -173,9 +166,6 @@ def headline_queries() -> dict:
               # representative shape (broadcast rule join with a
               # startswith theta leg + map-side struct-max winner)
               "crawl_robots",
-              # round-5h video tier: AVI demux + k-th-frame sample +
-              # JPEG entropy decode of sampled frames (mapInPandas)
-              "mm_video_frames",
               # round-5i batch: the grid-probe spatial self-join (explode
               # x9 + cell equi-join + integer distance filter), the KMV
               # set-expression epilogue (two bottom-k sketch builds +

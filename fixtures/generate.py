@@ -313,28 +313,8 @@ def generate(out_dir: str, n_pages: int = 500, n_annotated: int = 2000,
         "obj_norm": pa.array([o for _, _, o in srl], pa.string()),
     }), os.path.join(out_dir, "seed_relations.parquet"))
 
-    # media.parquet: a REAL binary media column (deterministic BMP / PCM
-    # WAV / compressed PNG blobs) so the multimodal decode operator is
-    # exercised reading bytes from storage, not from an in-plan encode.
-    from mxsparkg.datapipe import _encode_bmp, _encode_png, _encode_wav
 
-    m_ids, m_blobs = [], []
-    for i in range(200):
-        if i % 3 == 0:
-            blob = _encode_bmp(4 + i % 29, 3 + i % 17, seed=i)
-        elif i % 3 == 1:
-            blob = _encode_wav(8000 + (i % 3) * 4000, 50 + i % 100, seed=i)
-        else:
-            blob = _encode_png(4 + i % 13, 3 + i % 11, seed=i)
-        m_ids.append(i)
-        m_blobs.append(blob)
-    pq.write_table(pa.table({
-        "doc_id": pa.array(m_ids, pa.int64()),
-        "media": pa.array(m_blobs, pa.binary()),
-    }), os.path.join(out_dir, "media.parquet"), row_group_size=64)
-
-
-_FIXTURE_VERSION = "v3"  # bump when generate() gains/changes output files
+_FIXTURE_VERSION = "v4"  # bump when generate() gains/changes output files
 
 
 def ensure_fixtures(scale: str = "tiny", base: str = "/tmp/mxsparkg_fixtures") -> str:

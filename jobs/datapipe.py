@@ -35,17 +35,6 @@ ops:
                        (per-doc token counts + stream digest)
   dedup_substring      cross-doc duplicated-run strip manifest
   dedup_incremental    new-shard dedup vs the base corpus digest index
-  mm_decode_stub       multimodal decode-stub features
-  decode_media         REAL media decode: --input must be a
-                       (doc_id, media binary) parquet (e.g. the fixture
-                       media.parquet); parses BMP/WAV/PNG bytes
-  phash_pairs          image near-dup candidate pairs: dHash over a
-                       (doc_id, media binary) parquet of BMP thumbnails
-                       (grid-normalized, see downsample) + banded
-                       Hamming join
-  afp_pairs            audio near-dup candidate pairs: energy-delta
-                       fingerprint over a (doc_id, media binary)
-                       parquet of WAVs + the same banded Hamming join
 
 Prints one JSON line {op, rows, wall_sec, out}.
 """
@@ -76,12 +65,9 @@ def main() -> None:
                              "txt_chunk", "txt_pack_sequences",
                              "txt_bpe_merges", "bpe_encode",
                              "txt_collocations",
-                             "dedup_substring", "dedup_incremental",
-                             "mm_decode_stub", "decode_media",
-                             "phash_pairs", "afp_pairs"])
+                             "dedup_substring", "dedup_incremental"])
     ap.add_argument("--input", required=True,
-                    help="documents-shaped parquet (doc_id, text, ...); "
-                         "for decode_media a (doc_id, media binary) parquet")
+                    help="documents-shaped parquet (doc_id, text, ...)")
     ap.add_argument("--out", required=True)
     ap.add_argument("--min-est-jaccard", type=float, default=0.5)
     ap.add_argument("--merges", type=int, default=None,
@@ -108,12 +94,6 @@ def main() -> None:
             out_df = dp.minhash_candidate_pairs(sig, args.min_est_jaccard)
         elif args.op == "dedup_minhash_quality":
             out_df = dp.minhash_pair_quality(docs, args.min_est_jaccard)
-        elif args.op == "decode_media":
-            out_df = dp.decode_media(docs)
-        elif args.op == "phash_pairs":
-            out_df = dp.phash_candidate_pairs(dp.phash_media(docs))
-        elif args.op == "afp_pairs":
-            out_df = dp.phash_candidate_pairs(dp.afp_media(docs))
         elif args.op == "bpe_encode":
             n_merges = args.merges or dp.BPE_MERGES
             out_df = dp.bpe_encode(docs, dp.bpe_train(docs, n_merges))
@@ -142,7 +122,6 @@ def main() -> None:
                 "txt_collocations": dp.txt_collocations,
                 "dedup_substring": dp.dedup_substring,
                 "dedup_incremental": dp.dedup_incremental,
-                "mm_decode_stub": dp.mm_decode_stub,
             }[args.op]
             out_df = fn(spark, "")
         out_df.write.mode("overwrite").parquet(args.out)

@@ -22,7 +22,7 @@ Layout (SURVEY.md §7.0):
   pipeline   — lifecycle C: staged DAG with checkpoint/resume manifests
   contract   — driver-contract relational operators (SURVEY.md §2 keys)
   datapipe   — training-data ops: dedup, similarity search, text analysis,
-               multimodal column plumbing
+               crawl admission
 """
 
 __version__ = "0.1.0"

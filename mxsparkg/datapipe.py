@@ -1,6 +1,6 @@
 """Training-data pipeline operators over the web-text tables
 (documents, embeddings): deduplication, similarity search, text analysis,
-multimodal plumbing. Every op registers a `queries()` entry AND a DuckDB
+crawl admission. Every op registers a `queries()` entry AND a DuckDB
 `oracle_sql()` entry (driver correctness gate).
 
 Cross-engine determinism trick: all hashing is built from `md5()` (identical
@@ -17,8 +17,9 @@ Scale posture (100 TB corpus):
   is to NEVER form the O(n²) pair space; only bucket-mates meet.
 - embedding ops precompute norms once, block pairwise work by a key
   (label / LSH bucket), and broadcast the tiny query side for ANN top-k.
-- no per-row Python UDFs; the one Python stage (multimodal decode) is
-  mapInPandas over Arrow batches (input_hint).
+- no per-row Python UDFs; the few Python stages (per-group stats,
+  Misra-Gries heavy hitters) are applyInPandas / mapInPandas over Arrow
+  batches.
 """
 
 from __future__ import annotations
@@ -29,7 +30,6 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    IntegerType,
     LongType,
     StringType,
     StructField,
@@ -77,23 +77,6 @@ def _hyperplanes() -> list[list[float]]:
 
 def _docs(spark: SparkSession, sf: str) -> DataFrame:
     return spark.read.parquet(f"{sf}/documents.parquet")
-
-
-def _doc_ids_parallel(spark: SparkSession, sf: str) -> DataFrame:
-    """doc_id projection fanned out to every core BEFORE a Python-heavy
-    mapInPandas encode pass. The gate-SF documents table is one small
-    parquet file -> one input partition, so without this every synthetic
-    media generator (BMP/PNG/GIF/JPEG/WAV encode + per-pixel PRF) ran
-    single-core (measured: mm_phash_pairs spent most of its wall in a
-    1-partition stage at sf0.1). Shuffling bare longs costs ~nothing;
-    every downstream key is partition-invariant (order-insensitive value
-    hash), and REAL media tables arrive multi-partition from the file
-    source so production phash/decode paths never need this."""
-    return (
-        _docs(spark, sf)
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
 
 
 def _embs(spark: SparkSession, sf: str) -> DataFrame:
@@ -4207,2400 +4190,6 @@ def grp_apply_pandas_sql() -> str:
     """
 
 
-# ================================================================ multimodal
-
-MM_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("media_type", StringType()),
-        StructField("n_bytes", IntegerType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("n_frames", IntegerType()),
-    ]
-)
-
-
-def mm_decode_stub(spark: SparkSession, sf: str) -> DataFrame:
-    """Multimodal plumbing: treat content bytes as an opaque binary media
-    column and run a decode / feature-extract stage as mapInPandas over
-    Arrow batches. The decoder itself is a deterministic STUB (no image/
-    audio libs in this container — a real deployment drops PIL/ffmpeg into
-    `_decode_real`); the Spark-side schema, batching and partitioning are
-    the real production shape."""
-
-    def decode(batches):
-        for pdf in batches:
-            blob = pdf["media"]
-            n_bytes = blob.map(len).astype("int32")
-            media_type = (pdf["doc_id"] % 3).map(
-                {0: "image", 1: "audio", 2: "video"}
-            )
-            # _decode_real(blob) would go here; deterministic fake features:
-            yield_df = pdf[["doc_id"]].copy()
-            yield_df["media_type"] = media_type
-            yield_df["n_bytes"] = n_bytes
-            yield_df["width"] = (160 + (n_bytes % 8) * 80).astype("int32")
-            yield_df["height"] = (120 + (n_bytes % 6) * 60).astype("int32")
-            yield_df["n_frames"] = (
-                (n_bytes % 24 + 1).where(media_type == "video", 1)
-            ).astype("int32")
-            yield yield_df
-
-    media = _docs(spark, sf).select(
-        "doc_id", F.col("text").cast("binary").alias("media")
-    )
-    return media.mapInPandas(decode, MM_SCHEMA)
-
-
-def _decode_real(blob):  # pragma: no cover - no media libs in sandbox
-    """Slot for lib-backed decode of formats needing external codecs
-    (MP3/MP4 need ffmpeg — not in this container). BMP/WAV, zlib-compressed
-    PNG and baseline JPEG (entropy layer, _parse_jpeg) are decoded for real
-    by _parse_media below; route other magics here."""
-    raise NotImplementedError(
-        "MP3/MP4 decode needs ffmpeg; wire it in here"
-    )
-
-
-# ---- real pure-Python codecs (BMP + PCM WAV + compressed PNG) ------------
-#
-# These are not stubs: _encode_* emit spec-conformant files (BITMAPINFOHEADER
-# BMP with BI_RGB 24bpp + 4-byte row padding; RIFF/WAVE with PCM fmt chunk;
-# PNG with CRC-checked IHDR/IDAT/IEND chunks and zlib-compressed filtered
-# scanlines) and the parsers read ONLY the binary stream back (struct.unpack
-# headers; zlib.decompress for PNG pixel data). The mm_decode/mm_decode_png
-# oracles recompute every field arithmetically from doc_id, so an
-# encoder/parser that disagreed with the spec-derived sizes would fail the
-# driver's value-hash gate.
-
-def _encode_bmp(width: int, height: int, seed: int) -> bytes:
-    import struct
-
-    stride = (width * 3 + 3) // 4 * 4
-    img_size = stride * height
-    file_size = 54 + img_size
-    header = struct.pack("<2sIHHI", b"BM", file_size, 0, 0, 54)
-    info = struct.pack(
-        "<IiiHHIIiiII", 40, width, height, 1, 24, 0, img_size, 2835, 2835, 0, 0
-    )
-    px = bytes((seed + i) % 256 for i in range(img_size))
-    return header + info + px
-
-
-def _encode_wav(sample_rate: int, n_samples: int, seed: int) -> bytes:
-    import struct
-
-    data_size = n_samples * 2  # mono 16-bit PCM
-    hdr = struct.pack(
-        "<4sI4s4sIHHIIHH4sI",
-        b"RIFF", 36 + data_size, b"WAVE",
-        b"fmt ", 16, 1, 1, sample_rate, sample_rate * 2, 2, 16,
-        b"data", data_size,
-    )
-    body = bytes((seed * 7 + i) % 256 for i in range(data_size))
-    return hdr + body
-
-
-PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
-
-
-def _encode_png(width: int, height: int, seed: int) -> bytes:
-    """Minimal spec-conformant PNG: 8-bit grayscale, filter type 0 per
-    scanline, one zlib-compressed IDAT, CRC32 on every chunk. Pure stdlib
-    (struct + zlib) — a REAL compressed format with no external deps."""
-    import struct
-    import zlib
-
-    def chunk(ctype: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data)) + ctype + data
-            + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
-        )
-
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, 0, 0, 0, 0)
-    raw = b"".join(
-        b"\x00" + bytes((seed + y * width + x) % 256 for x in range(width))
-        for y in range(height)
-    )
-    return (
-        PNG_MAGIC
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(raw, 6))
-        + chunk(b"IEND", b"")
-    )
-
-
-def _parse_png(blob: bytes) -> dict:
-    """Real PNG decode: walk the chunk stream (verifying each CRC), parse
-    IHDR, zlib-DECOMPRESS the concatenated IDAT data and check it against
-    the exact filtered-scanline size the IHDR implies — so a wrong
-    compressor, a corrupt stream or a lying header all fail loudly.
-    Returns grayscale-8 metadata incl. n_pixels from the decompressed
-    bytes (not from the header)."""
-    import struct
-    import zlib
-
-    if blob[:8] != PNG_MAGIC:
-        raise ValueError("not a PNG stream")
-    pos = 8
-    width = height = bit_depth = color_type = None
-    idat = b""
-    while pos + 8 <= len(blob):
-        (length,) = struct.unpack_from(">I", blob, pos)
-        ctype = blob[pos + 4:pos + 8]
-        data = blob[pos + 8:pos + 8 + length]
-        (crc,) = struct.unpack_from(">I", blob, pos + 8 + length)
-        if zlib.crc32(ctype + data) & 0xFFFFFFFF != crc:
-            raise ValueError(f"PNG chunk {ctype!r} CRC mismatch")
-        if ctype == b"IHDR":
-            width, height, bit_depth, color_type = struct.unpack_from(
-                ">IIBB", data, 0
-            )
-        elif ctype == b"IDAT":
-            idat += data
-        elif ctype == b"IEND":
-            break
-        pos += 12 + length
-    if width is None:
-        raise ValueError("PNG stream has no IHDR")
-    raw = zlib.decompress(idat)
-    if bit_depth == 8 and color_type == 0:  # grayscale: 1 byte/px + filter
-        expected = height * (1 + width)
-        if len(raw) != expected:
-            raise ValueError(
-                f"PNG pixel data {len(raw)}B != expected {expected}B"
-            )
-    return {
-        "media_type": "image",
-        "width": width,
-        "height": height,
-        "bit_depth": bit_depth,
-        "color_type": color_type,
-        "n_pixels": (len(raw) - height) if color_type == 0 else width * height,
-    }
-
-
-def _parse_media(blob: bytes) -> dict:
-    """Sniff magic bytes, parse the real header. Returns media_type plus
-    typed metadata; unknown magics fall through to the lib slot."""
-    import struct
-
-    if blob[:8] == PNG_MAGIC:
-        p = _parse_png(blob)
-        return {
-            "media_type": "image",
-            "n_bytes": len(blob),
-            "width": p["width"],
-            "height": p["height"],
-            "sample_rate": 0,
-            "n_samples": 0,
-            "bit_depth": p["bit_depth"],
-        }
-    if blob[:2] == b"\xff\xd8":
-        j = _parse_jpeg(blob)
-        return {
-            "media_type": "image",
-            "n_bytes": len(blob),
-            "width": j["width"],
-            "height": j["height"],
-            "sample_rate": 0,
-            "n_samples": 0,
-            "bit_depth": 8,
-        }
-    if blob[:6] == GIF_MAGIC:
-        g = _parse_gif(blob)
-        return {
-            "media_type": "image",
-            "n_bytes": len(blob),
-            "width": g["width"],
-            "height": g["height"],
-            "sample_rate": 0,
-            "n_samples": 0,
-            # palette depth: 4 colors → 2 bits
-            "bit_depth": max(1, (g["n_colors"] - 1).bit_length()),
-        }
-    if blob[:2] == b"BM":
-        file_size, = struct.unpack_from("<I", blob, 2)
-        width, height = struct.unpack_from("<ii", blob, 18)
-        bpp, = struct.unpack_from("<H", blob, 28)
-        return {
-            "media_type": "image",
-            "n_bytes": file_size,
-            "width": width,
-            "height": abs(height),
-            "sample_rate": 0,
-            "n_samples": 0,
-            "bit_depth": bpp,
-        }
-    if blob[:4] == b"RIFF" and blob[8:12] == b"WAVE":
-        riff_size, = struct.unpack_from("<I", blob, 4)
-        _fmt_len, _pcm, n_ch, rate = struct.unpack_from("<IHHI", blob, 16)
-        bits, = struct.unpack_from("<H", blob, 34)
-        data_size, = struct.unpack_from("<I", blob, 40)
-        return {
-            "media_type": "audio",
-            "n_bytes": riff_size + 8,
-            "width": 0,
-            "height": 0,
-            "sample_rate": rate,
-            "n_samples": data_size // (n_ch * bits // 8),
-            "bit_depth": bits,
-        }
-    return _decode_real(blob)
-
-
-MM_REAL_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("media_type", StringType()),
-        StructField("n_bytes", LongType()),
-        StructField("width", LongType()),
-        StructField("height", LongType()),
-        StructField("sample_rate", LongType()),
-        StructField("n_samples", LongType()),
-        StructField("bit_depth", LongType()),
-    ]
-)
-
-
-def _media_column_df(spark: SparkSession, sf: str) -> DataFrame:
-    """(doc_id, media: binary) — deterministic BMP/WAV blobs as a REAL
-    binary column (the sandbox stand-in for a stored media column; the
-    driver's tables carry no binaries, so the column is materialized by a
-    dedicated encode pass and the decoder downstream sees only bytes)."""
-
-    def encode(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            blobs = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                if d % 2 == 0:
-                    blobs.append(_encode_bmp(4 + d % 29, 3 + d % 17, seed=d))
-                else:
-                    blobs.append(
-                        _encode_wav(8000 + (d % 3) * 4000, 50 + d % 100, seed=d)
-                    )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": blobs})
-
-    return (
-        _doc_ids_parallel(spark, sf)
-        .mapInPandas(encode, "doc_id long, media binary")
-    )
-
-
-def decode_media(media: DataFrame) -> DataFrame:
-    """The production decode operator: (doc_id, media: binary) → typed
-    metadata by parsing the actual bytes (BMP/WAV headers, PNG chunk
-    stream). Reusable over ANY DataFrame with a binary media column —
-    the fixture corpus ships one (media.parquet) and tests drive this
-    straight off parquet.
-
-    Scale posture: mapInPandas over Arrow batches, one narrow Python pass,
-    no shuffle; fat blobs stay inside the partition that read them."""
-
-    def decode(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["media"]):
-                meta = _parse_media(bytes(blob))
-                rows.append({"doc_id": int(doc_id), **meta})
-            yield pd.DataFrame(
-                rows,
-                columns=[f.name for f in MM_REAL_SCHEMA.fields],
-            )
-
-    return media.mapInPandas(decode, MM_REAL_SCHEMA)
-
-
-def mm_decode(spark: SparkSession, sf: str) -> DataFrame:
-    """Real multimodal decode END-TO-END over an opaque binary column:
-    encode pass materializes (doc_id, media: binary) — even doc_ids a BMP,
-    odd a PCM WAV — then decode_media() parses the actual bytes back. The
-    decoder consumes only the binary column (never doc_id arithmetic), and
-    the oracle recomputes every field from doc_id (incl. the BMP 4-byte
-    row-stride padding), so this key certifies the encode→column→parse
-    round-trip, not just plumbing."""
-    return decode_media(_media_column_df(spark, sf))
-
-
-MM_PNG_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("media_type", StringType()),
-        StructField("width", LongType()),
-        StructField("height", LongType()),
-        StructField("bit_depth", LongType()),
-        StructField("color_type", LongType()),
-        StructField("n_pixels", LongType()),
-    ]
-)
-
-
-def mm_decode_png(spark: SparkSession, sf: str) -> DataFrame:
-    """Compressed-format decode, pure stdlib: encode pass writes a REAL
-    zlib-compressed PNG per doc into a binary column; decode pass walks
-    the chunk stream (CRC-verified), parses IHDR and DECOMPRESSES the
-    IDAT pixel data, deriving n_pixels from the decompressed byte count —
-    not the header. The oracle recomputes width/height/n_pixels from
-    doc_id arithmetic, so a broken compressor, chunk writer or parser
-    fails the value-hash gate. This is the declared-slot upgrade for
-    compressed media: same mapInPandas shape a JPEG/PIL decoder drops
-    into."""
-
-    def encode(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            blobs = [
-                _encode_png(4 + int(d) % 13, 3 + int(d) % 11, seed=int(d))
-                for d in pdf["doc_id"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": blobs})
-
-    def decode(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["media"]):
-                meta = _parse_png(bytes(blob))
-                rows.append({"doc_id": int(doc_id), **meta})
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in MM_PNG_SCHEMA.fields]
-            )
-
-    media = (
-        _doc_ids_parallel(spark, sf)
-        .mapInPandas(encode, "doc_id long, media binary")
-    )
-    return media.mapInPandas(decode, MM_PNG_SCHEMA)
-
-
-def mm_decode_png_sql() -> str:
-    return """
-      SELECT doc_id,
-        'image' AS media_type,
-        4 + doc_id % 13 AS width,
-        3 + doc_id % 11 AS height,
-        8 AS bit_depth,
-        0 AS color_type,
-        (4 + doc_id % 13) * (3 + doc_id % 11) AS n_pixels
-      FROM documents
-    """
-
-
-# ---- GIF89a codec (pure stdlib: variable-width LZW, the dictionary coder
-# PNG's zlib does NOT exercise) ----------------------------------------------
-
-GIF_MAGIC = b"GIF89a"
-GIF_COLORS = 4            # 2-bit palette → LZW min code size 2
-GIF_LZW_MIN = 2
-GIF_MAX_WIDTH = 12        # spec cap on code width
-
-
-def _gif_pixels(width: int, height: int, seed: int) -> list[int]:
-    """Deterministic palette indices — the closed form the oracle
-    recomputes: p_i = (seed·31 + i·7) mod n_colors."""
-    return [
-        (seed * 31 + i * 7) % GIF_COLORS for i in range(width * height)
-    ]
-
-
-def _lzw_encode(pixels: list[int], min_code: int = GIF_LZW_MIN) -> bytes:
-    """GIF variable-width LZW: clear code emitted first, code width grows
-    when the next free code would not fit, table capped at 2^12 (emit
-    clear + reset — exercised by the larger fixture images)."""
-    clear, eoi = 1 << min_code, (1 << min_code) + 1
-    out_bits: list[tuple[int, int]] = []  # (code, width)
-
-    def reset():
-        return {(i,): i for i in range(clear)}, eoi + 1, min_code + 1
-
-    table, next_code, width = reset()
-    out_bits.append((clear, width))
-    w: tuple[int, ...] = ()
-    for p in pixels:
-        wp = w + (p,)
-        if wp in table:
-            w = wp
-            continue
-        out_bits.append((table[w], width))
-        table[wp] = next_code
-        next_code += 1
-        if next_code == (1 << width) + 1 and width < GIF_MAX_WIDTH:
-            width += 1
-        if next_code == (1 << GIF_MAX_WIDTH):
-            out_bits.append((clear, width))
-            table, next_code, width = reset()
-        w = (p,)
-    if w:
-        out_bits.append((table[w], width))
-    out_bits.append((eoi, width))
-    # pack LSB-first
-    acc = n = 0
-    data = bytearray()
-    for code, cw in out_bits:
-        acc |= code << n
-        n += cw
-        while n >= 8:
-            data.append(acc & 0xFF)
-            acc >>= 8
-            n -= 8
-    if n:
-        data.append(acc & 0xFF)
-    return bytes(data)
-
-
-def _lzw_decode(data: bytes, min_code: int = GIF_LZW_MIN) -> list[int]:
-    """Mirror decoder incl. the cScSc special case (code == next free →
-    prev + prev[0]) and clear-code table resets."""
-    clear, eoi = 1 << min_code, (1 << min_code) + 1
-    pos = 0  # bit cursor
-
-    def read(width: int) -> int:
-        nonlocal pos
-        v = 0
-        for k in range(width):
-            byte = pos >> 3
-            if byte >= len(data):
-                return eoi  # truncated stream: stop cleanly
-            v |= ((data[byte] >> (pos & 7)) & 1) << k
-            pos += 1
-        return v
-
-    def reset():
-        return {i: (i,) for i in range(clear)}, eoi + 1, min_code + 1
-
-    table, next_code, width = reset()
-    out: list[int] = []
-    prev: tuple[int, ...] | None = None
-    while True:
-        code = read(width)
-        if code == eoi:
-            break
-        if code == clear:
-            table, next_code, width = reset()
-            prev = None
-            continue
-        if code in table:
-            entry = table[code]
-        elif code == next_code and prev is not None:
-            entry = prev + (prev[0],)
-        else:
-            break  # corrupt stream: keep what we have
-        out.extend(entry)
-        if prev is not None:
-            table[next_code] = prev + (entry[0],)
-            next_code += 1
-            if next_code == (1 << width) and width < GIF_MAX_WIDTH:
-                width += 1
-        prev = entry
-    return out
-
-
-def _encode_gif(width: int, height: int, seed: int) -> bytes:
-    """Minimal spec-correct GIF89a: header, logical screen descriptor,
-    4-entry global color table, image descriptor, LZW data in ≤255-byte
-    sub-blocks, trailer."""
-    import struct
-
-    gct = b"".join(
-        bytes((85 * i, 255 - 85 * i, (40 * i) & 0xFF))
-        for i in range(GIF_COLORS)
-    )
-    lsd = struct.pack("<HHBBB", width, height, 0x80 | 0x01, 0, 0)
-    # packed 0x81: GCT present, size bits 01 → 2^(1+1)=4 entries
-    img = struct.pack("<BHHHHB", 0x2C, 0, 0, width, height, 0)
-    lzw = _lzw_encode(_gif_pixels(width, height, seed))
-    blocks = bytearray()
-    for i in range(0, len(lzw), 255):
-        chunk = lzw[i : i + 255]
-        blocks += bytes([len(chunk)]) + chunk
-    return (
-        GIF_MAGIC + lsd + gct + img + bytes([GIF_LZW_MIN])
-        + bytes(blocks) + b"\x00\x3b"
-    )
-
-
-def _parse_gif(blob: bytes) -> dict:
-    """Walk the block structure, decompress the LZW pixel stream, and
-    return content-level facts: dimensions from the image descriptor,
-    n_pixels from the DECODED index count (not the header), and a
-    position-weighted checksum Σ p_i·(i+1) — one transposed or mis-coded
-    pixel anywhere changes it."""
-    import struct
-
-    assert blob[:6] == GIF_MAGIC, "not GIF89a"
-    w_s, h_s, packed, _bg, _ar = struct.unpack("<HHBBB", blob[6:13])
-    pos = 13
-    n_colors = 0
-    if packed & 0x80:
-        n_colors = 2 << (packed & 0x07)
-        pos += 3 * n_colors
-    while pos < len(blob):
-        b = blob[pos]
-        if b == 0x21:  # extension: label + sub-blocks
-            pos += 2
-            while blob[pos] != 0:
-                pos += 1 + blob[pos]
-            pos += 1
-        elif b == 0x2C:
-            _l, _t, iw, ih, ipacked = struct.unpack(
-                "<HHHHB", blob[pos + 1 : pos + 10])
-            pos += 10
-            if ipacked & 0x80:  # local color table
-                pos += 3 * (2 << (ipacked & 0x07))
-            min_code = blob[pos]
-            pos += 1
-            lzw = bytearray()
-            while blob[pos] != 0:
-                n = blob[pos]
-                lzw += blob[pos + 1 : pos + 1 + n]
-                pos += 1 + n
-            pos += 1
-            pixels = _lzw_decode(bytes(lzw), min_code)
-            return {
-                "media_type": "image",
-                "width": iw,
-                "height": ih,
-                "n_colors": n_colors,
-                "n_pixels": len(pixels),
-                "px_checksum": sum(
-                    p * (i + 1) for i, p in enumerate(pixels)
-                ),
-            }
-        elif b == 0x3B:
-            break
-        else:
-            raise ValueError(f"unknown GIF block 0x{b:02x}")
-    raise ValueError("no image block")
-
-
-MM_GIF_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("media_type", StringType()),
-        StructField("width", LongType()),
-        StructField("height", LongType()),
-        StructField("n_colors", LongType()),
-        StructField("n_pixels", LongType()),
-        StructField("px_checksum", LongType()),
-    ]
-)
-
-
-def mm_decode_gif(spark: SparkSession, sf: str) -> DataFrame:
-    """GIF89a decode, pure stdlib: the encode pass writes a REAL GIF per
-    doc (variable-width LZW with clear-code resets — the DICTIONARY
-    coder family, which PNG's zlib and JPEG's Huffman do not exercise);
-    the decode pass walks the block structure and DECODES the pixel
-    stream, reporting n_pixels from the decoded count and a
-    position-weighted pixel checksum. The oracle recomputes the checksum
-    from the generator's closed form per pixel index, so a wrong code
-    width, a missed table reset, or the cScSc case mishandled fails the
-    value hash. Same mapInPandas shape as the other codecs."""
-
-    def encode(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            blobs = [
-                _encode_gif(4 + int(d) % 11, 3 + int(d) % 7, seed=int(d))
-                for d in pdf["doc_id"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": blobs})
-
-    def decode(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["media"]):
-                meta = _parse_gif(bytes(blob))
-                rows.append({"doc_id": int(doc_id), **meta})
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in MM_GIF_SCHEMA.fields]
-            )
-
-    media = (
-        _doc_ids_parallel(spark, sf)
-        .mapInPandas(encode, "doc_id long, media binary")
-    )
-    return media.mapInPandas(decode, MM_GIF_SCHEMA)
-
-
-# ---- audio feature extraction (windowed energy / zero-crossing rate) ------
-
-AUDIO_WIN = 16  # samples per analysis window
-
-
-def _wav_samples(blob: bytes) -> list[int]:
-    """Real 16-bit LE PCM decode: walk the RIFF chunk list to the data
-    chunk instead of assuming the canonical 44-byte header — real WAVs
-    carry LIST/fact/cue chunks between fmt and data, and a parser that
-    hardcodes offset 44 silently mis-reads them (the afp container-
-    variant plant exists to catch exactly that). Chunks are word-aligned
-    per spec (odd sizes get a pad byte)."""
-    import struct
-
-    pos = 12
-    while pos + 8 <= len(blob):
-        cid, csz = struct.unpack_from("<4sI", blob, pos)
-        if cid == b"data":
-            n = csz // 2
-            return list(struct.unpack_from(f"<{n}h", blob, pos + 8))
-        pos += 8 + csz + (csz & 1)
-    raise ValueError("WAV has no data chunk")
-
-
-def mm_audio_energy(spark: SparkSession, sf: str) -> DataFrame:
-    """The feature-extract step after audio decode — the frame-level
-    energy/zero-crossing profile every audio pipeline computes before
-    VAD/segmentation: per analysis window of {AUDIO_WIN} samples, the
-    exact integer energy Σs² and the zero-crossing count (consecutive
-    sign flips within the window). The encode pass writes a REAL WAV per
-    doc; the decode pass struct-unpacks the PCM and computes features
-    from the DECODED samples, while the oracle recomputes both from the
-    generator's byte-arithmetic closed form (b_j = (7·doc_id + j) mod
-    256 → s_i = 257t+256 − 65536·[t ≥ 127], t = (7·doc_id + 2i) mod
-    256) — a wrong endianness, header offset, sign extension, or window
-    boundary fails the value hash. Energies are exact bigints (a float
-    RMS would be ulp-portable anyway, but exact is free here)."""
-
-    def encode(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            blobs = [
-                _encode_wav(8000, 40 + int(d) % 80, seed=int(d))
-                for d in pdf["doc_id"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": blobs})
-
-    def features(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["media"]):
-                s = _wav_samples(bytes(blob))
-                for w0 in range(0, len(s), AUDIO_WIN):
-                    win = s[w0 : w0 + AUDIO_WIN]
-                    rows.append(
-                        {
-                            "doc_id": int(doc_id),
-                            "win_id": w0 // AUDIO_WIN,
-                            "n": len(win),
-                            "energy": sum(x * x for x in win),
-                            "n_zero_cross": sum(
-                                1
-                                for a, b in zip(win, win[1:])
-                                if (a >= 0) != (b >= 0)
-                            ),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "win_id", "n", "energy", "n_zero_cross"],
-            )
-
-    media = (
-        _doc_ids_parallel(spark, sf)
-        .mapInPandas(encode, "doc_id long, media binary")
-    )
-    return media.mapInPandas(
-        features,
-        "doc_id long, win_id long, n long, energy long, n_zero_cross long",
-    )
-
-
-def mm_audio_energy_sql() -> str:
-    w = AUDIO_WIN
-    # closed-form sample value at index i for seed doc_id
-    t = "((d.doc_id * 7 + 2 * i) % 256)"
-    u = f"(CASE WHEN {t} = 255 THEN 255 ELSE 257 * {t} + 256 END)"
-    s = f"(CASE WHEN {u} >= 32768 THEN {u} - 65536 ELSE {u} END)"
-    tp = "((d.doc_id * 7 + 2 * (i - 1)) % 256)"
-    up = f"(CASE WHEN {tp} = 255 THEN 255 ELSE 257 * {tp} + 256 END)"
-    sp = f"(CASE WHEN {up} >= 32768 THEN {up} - 65536 ELSE {up} END)"
-    return f"""
-      WITH idx AS (SELECT i FROM range(0, 130) t(i)),
-      samp AS (
-        SELECT d.doc_id, i, i // {w} AS win_id,
-               {s} AS s,
-               CASE WHEN i % {w} > 0
-                    AND (({s} >= 0) <> ({sp} >= 0)) THEN 1 ELSE 0 END AS zc
-        FROM documents d CROSS JOIN idx
-        WHERE i < 40 + d.doc_id % 80)
-      SELECT doc_id, CAST(win_id AS BIGINT) AS win_id,
-             CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(s * s) AS BIGINT) AS energy,
-             CAST(sum(zc) AS BIGINT) AS n_zero_cross
-      FROM samp GROUP BY doc_id, win_id
-    """
-
-
-def mm_decode_gif_sql() -> str:
-    # DuckDB's range() cannot take a correlated column bound — use a
-    # constant index table (max image is (4+10)*(3+6) = 126 px) and
-    # filter per doc inside the sum
-    return f"""
-      WITH idx AS (SELECT i FROM range(0, 130) t(i)),
-      cks AS (
-        SELECT d.doc_id,
-               CAST(sum(CASE WHEN i < (4 + d.doc_id % 11)
-                                   * (3 + d.doc_id % 7)
-                        THEN ((d.doc_id * 31 + i * 7) % {GIF_COLORS})
-                             * (i + 1)
-                        ELSE 0 END) AS BIGINT) AS px_checksum
-        FROM documents d CROSS JOIN idx GROUP BY d.doc_id)
-      SELECT d.doc_id,
-        'image' AS media_type,
-        4 + d.doc_id % 11 AS width,
-        3 + d.doc_id % 7 AS height,
-        {GIF_COLORS} AS n_colors,
-        (4 + d.doc_id % 11) * (3 + d.doc_id % 7) AS n_pixels,
-        c.px_checksum
-      FROM documents d JOIN cks c ON c.doc_id = d.doc_id
-    """
-
-
-# ---- baseline JPEG codec (pure stdlib: struct + canonical Huffman) --------
-#
-# Upgrades the declared lib slot one more notch (PNG fell in round 3): the
-# ENTROPY layer of baseline JFIF — marker segments, DQT/DHT/SOF0/SOS
-# parsing, canonical Huffman decode driven by the DHT read from the stream
-# (never hardcoded tables on the decode side), DC differential coding,
-# AC run-length coding with ZRL/EOB, byte unstuffing (FF 00), zigzag
-# de-scan and dequantization — implemented from the public JPEG spec
-# (ITU T.81). The encoder is coefficient-domain (it plants known QUANTIZED
-# coefficients, the same fixture philosophy as _encode_png's known
-# dimensions), so every stat the gate key emits is exact integer
-# arithmetic on doc_id that the DuckDB oracle recomputes independently —
-# a wrong Huffman code, run length, sign extension or zigzag position
-# fails the value-hash gate. Pixel reconstruction (dequant + 2-D IDCT) is
-# implemented too and pytest-pinned on DC-only blocks, where the IDCT is
-# exactly integer (constant blocks) and decoded pixels must equal the
-# planted constants byte-for-byte. Only MP3/MP4 remain in the lib slot.
-
-# Annex K.3 / K.5 luminance tables (BITS = code count per length 1..16).
-_JPEG_DC_BITS = [0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0]
-_JPEG_DC_VALS = list(range(12))
-_JPEG_AC_BITS = [0, 2, 1, 3, 3, 2, 4, 3, 5, 5, 4, 4, 0, 0, 1, 0x7D]
-_JPEG_AC_VALS = [
-    0x01, 0x02, 0x03, 0x00, 0x04, 0x11, 0x05, 0x12,
-    0x21, 0x31, 0x41, 0x06, 0x13, 0x51, 0x61, 0x07,
-    0x22, 0x71, 0x14, 0x32, 0x81, 0x91, 0xA1, 0x08,
-    0x23, 0x42, 0xB1, 0xC1, 0x15, 0x52, 0xD1, 0xF0,
-    0x24, 0x33, 0x62, 0x72, 0x82, 0x09, 0x0A, 0x16,
-    0x17, 0x18, 0x19, 0x1A, 0x25, 0x26, 0x27, 0x28,
-    0x29, 0x2A, 0x34, 0x35, 0x36, 0x37, 0x38, 0x39,
-    0x3A, 0x43, 0x44, 0x45, 0x46, 0x47, 0x48, 0x49,
-    0x4A, 0x53, 0x54, 0x55, 0x56, 0x57, 0x58, 0x59,
-    0x5A, 0x63, 0x64, 0x65, 0x66, 0x67, 0x68, 0x69,
-    0x6A, 0x73, 0x74, 0x75, 0x76, 0x77, 0x78, 0x79,
-    0x7A, 0x83, 0x84, 0x85, 0x86, 0x87, 0x88, 0x89,
-    0x8A, 0x92, 0x93, 0x94, 0x95, 0x96, 0x97, 0x98,
-    0x99, 0x9A, 0xA2, 0xA3, 0xA4, 0xA5, 0xA6, 0xA7,
-    0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4, 0xB5, 0xB6,
-    0xB7, 0xB8, 0xB9, 0xBA, 0xC2, 0xC3, 0xC4, 0xC5,
-    0xC6, 0xC7, 0xC8, 0xC9, 0xCA, 0xD2, 0xD3, 0xD4,
-    0xD5, 0xD6, 0xD7, 0xD8, 0xD9, 0xDA, 0xE1, 0xE2,
-    0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA,
-    0xF1, 0xF2, 0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8,
-    0xF9, 0xFA,
-]
-_JPEG_QUANT = 16  # flat luminance quant table (all 64 entries)
-
-
-def _jpeg_zigzag() -> list[tuple[int, int]]:
-    """Zigzag index → (row, col), generated (anti-diagonal scan, direction
-    alternating) rather than hardcoded."""
-    order = []
-    for s in range(15):
-        diag = [(i, s - i) for i in range(s + 1) if i < 8 and s - i < 8]
-        order.extend(diag if s % 2 else diag[::-1])
-    return order
-
-
-def _jpeg_canonical_codes(bits: list[int], vals: list[int]) -> dict:
-    """symbol → (code, length) canonical Huffman assignment (T.81 C.2)."""
-    out, code, k = {}, 0, 0
-    for ln in range(1, 17):
-        for _ in range(bits[ln - 1]):
-            out[vals[k]] = (code, ln)
-            code += 1
-            k += 1
-        code <<= 1
-    return out
-
-
-class _JpegBitWriter:
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def write(self, code: int, length: int) -> None:
-        self.acc = (self.acc << length) | (code & ((1 << length) - 1))
-        self.n += length
-        while self.n >= 8:
-            byte = (self.acc >> (self.n - 8)) & 0xFF
-            self.out.append(byte)
-            if byte == 0xFF:          # byte stuffing
-                self.out.append(0x00)
-            self.n -= 8
-
-    def flush(self) -> bytes:
-        if self.n:
-            pad = 8 - self.n
-            self.write((1 << pad) - 1, pad)  # pad with 1-bits per spec
-        return bytes(self.out)
-
-
-def _jpeg_category(v: int) -> int:
-    return abs(v).bit_length()
-
-
-def _encode_jpeg(width: int, height: int, blocks: list[dict]) -> bytes:
-    """Baseline JFIF, single 8-bit grayscale component, no subsampling.
-    `blocks` is one dict per 8x8 data unit (raster order), mapping zigzag
-    index → QUANTIZED coefficient (0 = DC, absent = zero)."""
-    import struct
-
-    assert width % 8 == 0 and height % 8 == 0
-    assert len(blocks) == (width // 8) * (height // 8)
-    dc_codes = _jpeg_canonical_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
-    ac_codes = _jpeg_canonical_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
-    w = _JpegBitWriter()
-    prev_dc = 0
-    for blk in blocks:
-        diff = blk.get(0, 0) - prev_dc
-        prev_dc = blk.get(0, 0)
-        cat = _jpeg_category(diff)
-        w.write(*dc_codes[cat])
-        if cat:
-            w.write(diff if diff >= 0 else diff + (1 << cat) - 1, cat)
-        ac = sorted((z, v) for z, v in blk.items() if z > 0 and v != 0)
-        k = 1
-        for z, v in ac:
-            run = z - k
-            while run >= 16:
-                w.write(*ac_codes[0xF0])  # ZRL: 16 zeros
-                run -= 16
-            cat = _jpeg_category(v)
-            w.write(*ac_codes[(run << 4) | cat])
-            w.write(v if v >= 0 else v + (1 << cat) - 1, cat)
-            k = z + 1
-        if k <= 63:
-            w.write(*ac_codes[0x00])  # EOB
-    entropy = w.flush()
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(payload) + 2) + payload
-
-    dqt = seg(0xFFDB, bytes([0]) + bytes([_JPEG_QUANT] * 64))
-    sof = seg(
-        0xFFC0,
-        struct.pack(">BHHB", 8, height, width, 1) + bytes([1, 0x11, 0]),
-    )
-    dht = seg(
-        0xFFC4,
-        bytes([0x00]) + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS)
-        + bytes([0x10]) + bytes(_JPEG_AC_BITS) + bytes(_JPEG_AC_VALS),
-    )
-    sos = seg(0xFFDA, bytes([1, 1, 0x00, 0, 63, 0]))
-    app0 = seg(0xFFE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    return (
-        b"\xff\xd8" + app0 + dqt + sof + dht + sos + entropy + b"\xff\xd9"
-    )
-
-
-class _JpegBitReader:
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-        self.acc = 0
-        self.n = 0
-
-    def read(self, length: int) -> int:
-        while self.n < length:
-            b = self.data[self.pos]
-            self.pos += 1
-            if b == 0xFF:
-                nxt = self.data[self.pos]
-                if nxt == 0x00:
-                    self.pos += 1  # unstuff
-                else:
-                    raise ValueError(f"unexpected marker FF{nxt:02X} in scan")
-            self.acc = (self.acc << 8) | b
-            self.n += 8
-        self.n -= length
-        v = (self.acc >> self.n) & ((1 << length) - 1)
-        return v
-
-    def huff(self, table: dict) -> int:
-        code, ln = 0, 0
-        while ln < 17:
-            code = (code << 1) | self.read(1)
-            ln += 1
-            if (code, ln) in table:
-                return table[(code, ln)]
-        raise ValueError("invalid Huffman code in scan")
-
-
-def _jpeg_extend(v: int, cat: int) -> int:
-    return v if v >= (1 << (cat - 1)) else v - (1 << cat) + 1
-
-
-def _parse_jpeg(blob: bytes) -> dict:
-    """Full baseline-JPEG entropy decode of a single-component grayscale
-    scan: walks the marker stream, builds the Huffman tables FROM the DHT
-    segments, decodes every data unit (DC differential + AC run-length
-    with ZRL/EOB + sign extension), and returns the quantized-coefficient
-    blocks plus the quant table and dimensions. Raises on malformed
-    markers, codes outside the tables, or a scan that doesn't yield
-    exactly the block count SOF0 implies."""
-    import struct
-
-    if blob[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG stream")
-    pos = 2
-    quant: list[int] | None = None
-    width = height = None
-    huff: dict[tuple[int, int], dict] = {}
-    scan_data = None
-    while pos < len(blob):
-        marker, ln = struct.unpack_from(">HH", blob, pos)
-        payload = blob[pos + 4:pos + 2 + ln]
-        if marker == 0xFFDB:
-            if payload[0] & 0x0F == 0:
-                quant = list(payload[1:65])
-        elif marker == 0xFFC0:
-            _prec, height, width, ncomp = struct.unpack_from(">BHHB", payload)
-            # component spec follows the 6-byte frame header: id,
-            # sampling (H<<4|V), quant-table id
-            if ncomp != 1 or payload[7] != 0x11:
-                raise ValueError("only single-component 1x1 JPEG supported")
-        elif marker == 0xFFC4:
-            p = 0
-            while p < len(payload):
-                tc_th = payload[p]
-                bits = list(payload[p + 1:p + 17])
-                nvals = sum(bits)
-                vals = list(payload[p + 17:p + 17 + nvals])
-                huff[(tc_th >> 4, tc_th & 0x0F)] = {
-                    (c, l): s
-                    for s, (c, l) in _jpeg_canonical_codes(bits, vals).items()
-                }
-                p += 17 + nvals
-        elif marker == 0xFFDA:
-            scan_data = blob[pos + 2 + ln:]
-            break
-        elif marker == 0xFFD9:
-            break
-        pos += 2 + ln
-    if width is None or quant is None or scan_data is None:
-        raise ValueError("JPEG stream missing SOF0/DQT/SOS")
-    if scan_data[-2:] != b"\xff\xd9":
-        raise ValueError("JPEG scan not terminated by EOI")
-    r = _JpegBitReader(scan_data[:-2])
-    dc_tbl, ac_tbl = huff[(0, 0)], huff[(1, 0)]
-    n_blocks = (width // 8) * (height // 8)
-    blocks, prev_dc = [], 0
-    for _ in range(n_blocks):
-        cat = r.huff(dc_tbl)
-        diff = _jpeg_extend(r.read(cat), cat) if cat else 0
-        prev_dc += diff
-        blk = {0: prev_dc} if prev_dc else {}
-        k = 1
-        while k <= 63:
-            sym = r.huff(ac_tbl)
-            if sym == 0x00:
-                break
-            if sym == 0xF0:
-                k += 16
-                continue
-            k += sym >> 4
-            blk[k] = _jpeg_extend(r.read(sym & 0x0F), sym & 0x0F)
-            k += 1
-        blocks.append(blk)
-    return {
-        "width": width,
-        "height": height,
-        "quant": quant,
-        "blocks": blocks,
-    }
-
-
-def _decode_jpeg_pixels(blob: bytes):
-    """Pixel reconstruction: dequantize (flat table), de-zigzag, 2-D
-    orthonormal IDCT per block, +128 level shift, clamp to [0,255].
-    Returns an (height, width) uint8 numpy array."""
-    import numpy as np
-
-    meta = _parse_jpeg(blob)
-    zz = _jpeg_zigzag()
-    n = np.arange(8)
-    basis = np.cos((2 * n[None, :] + 1) * n[:, None] * np.pi / 16)
-    scale = np.full(8, np.sqrt(2 / 8))
-    scale[0] = np.sqrt(1 / 8)
-    ibasis = (scale[:, None] * basis).T  # IDCT-II matrix (orthonormal)
-    h, w = meta["height"], meta["width"]
-    img = np.zeros((h, w))
-    bw = w // 8
-    for bi, blk in enumerate(meta["blocks"]):
-        coef = np.zeros((8, 8))
-        for z, v in blk.items():
-            r_, c_ = zz[z]
-            coef[r_, c_] = v * meta["quant"][z]
-        px = ibasis @ coef @ ibasis.T + 128
-        by, bx = divmod(bi, bw)
-        img[by * 8:(by + 1) * 8, bx * 8:(bx + 1) * 8] = px
-    return np.clip(np.round(img), 0, 255).astype("uint8")
-
-
-def _jpeg_blocks_for_doc(doc_id: int, n_blocks: int) -> list[dict]:
-    """The planted quantized-coefficient pattern the gate key encodes —
-    every branch of the entropy coder is exercised: DC differences span
-    categories 0-6, AC v1 walks zigzag 1-5 (short runs) and may be zero
-    (EOB-only path), AC v2 at zigzag 30 forces a >=16-zero run (ZRL) when
-    present, and (round 5) AC v3 at zigzag 63 — the last coefficient —
-    forces 2-3 CONSECUTIVE ZRLs and the no-EOB-after-k63 ending. The
-    oracle recomputes the stats from this arithmetic."""
-    blocks = []
-    for b in range(n_blocks):
-        blk = {0: (doc_id + 7 * b) % 64 - 32}
-        v1 = (doc_id + 3 * b) % 15 - 7
-        if v1:
-            blk[1 + b % 5] = v1
-        v2 = (doc_id + b) % 3 - 1
-        if v2:
-            blk[30] = v2
-        v3 = (doc_id + 2 * b) % 5 - 2
-        if v3:
-            blk[63] = v3
-        blocks.append(blk)
-    return blocks
-
-
-# Fixed-point IDCT (the libjpeg-islow discipline): the 8x8 basis table
-# T[u][y] = round(2^13 * a(u) * cos((2y+1)·u·π/16)), a(0)=sqrt(1/8) else
-# sqrt(2/8), computed ONCE here and embedded as integer literals in the
-# DuckDB oracle — so the pixel certification has NO cross-engine float
-# surface at all. px_scaled = Σ_u Σ_v Cq[u][v]·T[u][y]·T[v][x] carries
-# scale 2^26; |Cq| <= 512 with <= 4 nonzero coefficients bounds
-# |px_scaled| < 2^35, so the +K·2^26 offset below keeps the rounding
-# numerator positive (floor == trunc, sidestepping DuckDB's
-# truncate-toward-zero `//` vs Python's floor).
-_JPEG_IDCT_BITS = 13
-_JPEG_IDCT_K = 1 << 12          # positive offset, in output-pixel units
-
-
-def _jpeg_idct_table() -> list[list[int]]:
-    import math
-
-    t = []
-    for u in range(8):
-        a = math.sqrt(1 / 8) if u == 0 else math.sqrt(2 / 8)
-        t.append([
-            round(a * math.cos((2 * y + 1) * u * math.pi / 16)
-                  * (1 << _JPEG_IDCT_BITS))
-            for y in range(8)
-        ])
-    return t
-
-
-def _decode_jpeg_pixels_int(blob: bytes):
-    """Pixel reconstruction with the FIXED-POINT integer IDCT: dequantize,
-    de-zigzag, T^T·Cq·T in int64, round via the positive-offset floor
-    trick, +128 level shift, clamp to [0,255]. Bit-identical to the DuckDB
-    oracle's arithmetic by construction (shared integer basis table);
-    within ±1 of the float IDCT path everywhere (pytest)."""
-    import numpy as np
-
-    meta = _parse_jpeg(blob)
-    zz = _jpeg_zigzag()
-    t = np.array(_jpeg_idct_table(), dtype=np.int64)
-    h, w = meta["height"], meta["width"]
-    img = np.zeros((h, w), dtype=np.int64)
-    bw = w // 8
-    two = 2 * _JPEG_IDCT_BITS
-    off = (1 << (two - 1)) + (_JPEG_IDCT_K << two)
-    for bi, blk in enumerate(meta["blocks"]):
-        coef = np.zeros((8, 8), dtype=np.int64)
-        for z, v in blk.items():
-            r_, c_ = zz[z]
-            coef[r_, c_] = v * meta["quant"][z]
-        scaled = t.T @ coef @ t
-        px = ((scaled + off) >> two) - _JPEG_IDCT_K + 128
-        by, bx = divmod(bi, bw)
-        img[by * 8:(by + 1) * 8, bx * 8:(bx + 1) * 8] = px
-    return np.clip(img, 0, 255).astype("uint8")
-
-
-MM_JPEG_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("media_type", StringType()),
-        StructField("width", LongType()),
-        StructField("height", LongType()),
-        StructField("n_blocks", LongType()),
-        StructField("dc_sum_q", LongType()),
-        StructField("ac_sum_q", LongType()),
-        StructField("n_ac_nonzero", LongType()),
-        StructField("px_sum", LongType()),
-        StructField("px_check", LongType()),
-    ]
-)
-
-
-def mm_decode_jpeg(spark: SparkSession, sf: str) -> DataFrame:
-    """Baseline-JPEG entropy decode under the oracle gate: encode pass
-    writes a REAL JFIF stream per doc (planted quantized coefficients,
-    standard Annex-K Huffman tables, byte stuffing); decode pass rebuilds
-    the Huffman tables from the stream's own DHT and entropy-decodes every
-    data unit, emitting integer coefficient statistics the DuckDB oracle
-    recomputes from doc_id arithmetic — any disagreement in Huffman
-    coding, run lengths, sign extension, DC prediction or block count
-    fails the value hash. Same mapInPandas shape as mm_decode_png."""
-
-    def encode(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            blobs = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w_, h_ = 8 * (1 + d % 4), 8 * (1 + d % 3)
-                blobs.append(
-                    _encode_jpeg(
-                        w_, h_, _jpeg_blocks_for_doc(d, (w_ // 8) * (h_ // 8))
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": blobs})
-
-    def decode(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["media"]):
-                blob = bytes(blob)
-                m = _parse_jpeg(blob)
-                acs = [
-                    v for blk in m["blocks"]
-                    for z, v in blk.items() if z > 0
-                ]
-                # round-5 pixel-level certificate: full IDCT output, as
-                # the pixel sum + position-weighted raster checksum
-                px = _decode_jpeg_pixels_int(blob).astype(
-                    np.int64).ravel()
-                rows.append({
-                    "doc_id": int(doc_id),
-                    "media_type": "image",
-                    "width": m["width"],
-                    "height": m["height"],
-                    "n_blocks": len(m["blocks"]),
-                    "dc_sum_q": sum(b.get(0, 0) for b in m["blocks"]),
-                    "ac_sum_q": sum(acs),
-                    "n_ac_nonzero": len(acs),
-                    "px_sum": int(px.sum()),
-                    "px_check": int(
-                        (px * (np.arange(px.size) + 1)).sum()
-                    ),
-                })
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in MM_JPEG_SCHEMA.fields]
-            )
-
-    media = (
-        _doc_ids_parallel(spark, sf)
-        .mapInPandas(encode, "doc_id long, media binary")
-    )
-    return media.mapInPandas(decode, MM_JPEG_SCHEMA)
-
-
-def mm_decode_jpeg_sql() -> str:
-    # the oracle's pixel layer shares the SAME Python-computed integer
-    # constants the decoder uses: zigzag (row,col) of the planted
-    # coefficient slots and the 64-entry fixed-point IDCT basis table —
-    # embedded as literals so there is no float anywhere in either engine
-    zz = _jpeg_zigzag()
-    q = _JPEG_QUANT
-    t_rows = ", ".join(
-        f"({u}, {y}, {t})"
-        for u, row in enumerate(_jpeg_idct_table())
-        for y, t in enumerate(row)
-    )
-    # v1 sits at zigzag 1 + b%5 — embed the 5 possible (row,col) slots
-    u1 = ", ".join(f"({k}, {zz[1 + k][0]}, {zz[1 + k][1]})" for k in range(5))
-    (u30, v30), (u63, v63) = zz[30], zz[63]
-    two = 2 * _JPEG_IDCT_BITS
-    off = (1 << (two - 1)) + (_JPEG_IDCT_K << two)
-    return f"""
-      WITH base AS (
-        SELECT doc_id,
-               8 * (1 + doc_id % 4) AS width,
-               8 * (1 + doc_id % 3) AS height,
-               (1 + doc_id % 4) * (1 + doc_id % 3) AS n_blocks
-        FROM documents),
-      blocks AS (
-        SELECT doc_id, width, unnest(range(0, n_blocks)) AS b FROM base),
-      stats AS (
-        SELECT doc_id,
-               sum((doc_id + 7 * b) % 64 - 32) AS dc_sum_q,
-               sum(((doc_id + 3 * b) % 15 - 7)
-                   + ((doc_id + b) % 3 - 1)
-                   + ((doc_id + 2 * b) % 5 - 2)) AS ac_sum_q,
-               sum(CASE WHEN (doc_id + 3 * b) % 15 <> 7 THEN 1 ELSE 0 END
-                   + CASE WHEN (doc_id + b) % 3 <> 1 THEN 1 ELSE 0 END
-                   + CASE WHEN (doc_id + 2 * b) % 5 <> 2 THEN 1 ELSE 0 END)
-                 AS n_ac_nonzero
-        FROM blocks GROUP BY doc_id),
-      idct(u, y, t) AS (VALUES {t_rows}),
-      v1slot(k, r, c) AS (VALUES {u1}),
-      coefs AS (
-        SELECT doc_id, width, b, 0 AS cu, 0 AS cv,
-               ((doc_id + 7 * b) % 64 - 32) * {q} AS cq
-        FROM blocks
-        UNION ALL
-        SELECT k.doc_id, k.width, k.b, s.r, s.c,
-               ((k.doc_id + 3 * k.b) % 15 - 7) * {q}
-        FROM blocks k JOIN v1slot s ON s.k = k.b % 5
-        WHERE (k.doc_id + 3 * k.b) % 15 <> 7
-        UNION ALL
-        SELECT doc_id, width, b, {u30}, {v30},
-               ((doc_id + b) % 3 - 1) * {q}
-        FROM blocks WHERE (doc_id + b) % 3 <> 1
-        UNION ALL
-        SELECT doc_id, width, b, {u63}, {v63},
-               ((doc_id + 2 * b) % 5 - 2) * {q}
-        FROM blocks WHERE (doc_id + 2 * b) % 5 <> 2),
-      px AS (
-        SELECT c.doc_id, c.width, c.b, tu.y AS y, tv.y AS x,
-               GREATEST(0, LEAST(255,
-                 (SUM(c.cq * tu.t * tv.t) + {off}) // {1 << two}
-                 - {_JPEG_IDCT_K} + 128)) AS px
-        FROM coefs c
-        JOIN idct tu ON tu.u = c.cu
-        JOIN idct tv ON tv.u = c.cv
-        GROUP BY 1, 2, 3, 4, 5),
-      pxstats AS (
-        SELECT doc_id, SUM(px) AS px_sum,
-               SUM(px * (((b // (width // 8)) * 8 + y) * width
-                         + (b % (width // 8)) * 8 + x + 1)) AS px_check
-        FROM px GROUP BY doc_id)
-      SELECT b.doc_id, 'image' AS media_type, b.width, b.height,
-             CAST(b.n_blocks AS BIGINT) AS n_blocks,
-             CAST(s.dc_sum_q AS BIGINT) AS dc_sum_q,
-             CAST(s.ac_sum_q AS BIGINT) AS ac_sum_q,
-             CAST(s.n_ac_nonzero AS BIGINT) AS n_ac_nonzero,
-             CAST(p.px_sum AS BIGINT) AS px_sum,
-             CAST(p.px_check AS BIGINT) AS px_check
-      FROM base b JOIN stats s USING (doc_id) JOIN pxstats p USING (doc_id)
-    """
-
-
-
-
-# ----------------------------------------------------------- video frames --
-# AVI-MJPEG is the one video container a pure-stdlib pipeline can do END
-# TO END: RIFF chunk walking (the WAV machinery's container family) plus
-# the certified baseline-JPEG entropy decoder for the frames. MP4/H.264
-# remains the declared ffmpeg slot (decode_media_real).
-
-VIDEO_FPS = 10
-VIDEO_SAMPLE_K = 2          # keep every k-th frame (the frame-sample op)
-VIDEO_SEED_A = 131          # per-frame JPEG seed = A*doc_id + B*frame
-VIDEO_SEED_B = 17
-
-
-def _encode_avi_mjpeg(width: int, height: int,
-                      frames: list[bytes], fps: int = VIDEO_FPS) -> bytes:
-    """Minimal spec-shaped AVI: RIFF('AVI ') > LIST hdrl (avih + LIST
-    strl (strh 'vids'/'MJPG' + strf BITMAPINFOHEADER)) > LIST movi of
-    '00dc' frame chunks. Every chunk even-padded per RIFF."""
-    import struct
-
-    def chunk(fourcc: bytes, data: bytes) -> bytes:
-        pad = b"\x00" if len(data) % 2 else b""
-        return fourcc + struct.pack("<I", len(data)) + data + pad
-
-    def lst(kind: bytes, data: bytes) -> bytes:
-        return chunk(b"LIST", kind + data)
-
-    avih = struct.pack(
-        "<14I", 1000000 // fps, 0, 0, 0x10, len(frames), 0, 1, 0,
-        width, height, 0, 0, 0, 0,
-    )
-    strh = struct.pack(
-        "<4s4sIHHIIIIIIII4h", b"vids", b"MJPG", 0, 0, 0, 0,
-        1, fps, 0, len(frames), 0, 0, 0, 0, 0, width, height,
-    )
-    strf = struct.pack(
-        "<Iii2H4sI2i2I", 40, width, height, 1, 24, b"MJPG",
-        width * height * 3, 0, 0, 0, 0,
-    )
-    hdrl = lst(b"hdrl", chunk(b"avih", avih)
-               + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)))
-    movi = lst(b"movi", b"".join(chunk(b"00dc", f) for f in frames))
-    return chunk(b"RIFF", b"AVI " + hdrl + movi)
-
-
-def _parse_avi_mjpeg(blob: bytes) -> dict:
-    """Walk the RIFF tree, read dwTotalFrames/width/height from avih,
-    collect the '00dc' frame payloads from movi (honoring even padding).
-    Raises on malformed container; asserts header frame count == counted
-    chunks (a lying header is corruption, not a soft miss)."""
-    import struct
-
-    if blob[:4] != b"RIFF" or blob[8:12] != b"AVI ":
-        raise ValueError("not an AVI-RIFF stream")
-    meta: dict = {"frames": []}
-
-    def walk(buf: bytes) -> None:
-        i = 0
-        while i + 8 <= len(buf):
-            fourcc = buf[i:i + 4]
-            (size,) = struct.unpack("<I", buf[i + 4:i + 8])
-            data = buf[i + 8:i + 8 + size]
-            if len(data) < size:
-                raise ValueError(
-                    f"truncated {fourcc!r} chunk: {len(data)} of "
-                    f"{size} bytes"
-                )
-            if fourcc == b"LIST":
-                walk(data[4:])
-            elif fourcc == b"avih":
-                vals = struct.unpack("<14I", data[:56])
-                meta["n_frames_hdr"] = vals[4]
-                meta["width"] = vals[8]
-                meta["height"] = vals[9]
-            elif fourcc == b"00dc":
-                meta["frames"].append(data)
-            i += 8 + size + (size % 2)
-
-    walk(blob[12:])
-    if meta.get("n_frames_hdr") != len(meta["frames"]):
-        raise ValueError(
-            f"avih says {meta.get('n_frames_hdr')} frames, "
-            f"movi has {len(meta['frames'])}"
-        )
-    return meta
-
-
-MM_VIDEO_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("frame_idx", LongType()),
-        StructField("n_frames", LongType()),
-        StructField("width", LongType()),
-        StructField("height", LongType()),
-        StructField("dc_sum_q", LongType()),
-        StructField("ac_sum_q", LongType()),
-        StructField("n_ac_nonzero", LongType()),
-    ]
-)
-
-
-def mm_video_frames(spark: SparkSession, sf: str) -> DataFrame:
-    """Video frame-sampling under the oracle gate — the multimodal op an
-    LLM data pipeline runs on video: demux the container, keep every
-    k-th frame, decode just those. Encode pass writes a REAL AVI-MJPEG
-    per doc (4-8 frames, each frame a real JFIF stream with planted
-    per-frame coefficients seeded A*doc_id + B*frame); decode pass walks
-    the RIFF tree, cross-checks avih's frame count against the counted
-    '00dc' chunks, samples every VIDEO_SAMPLE_K-th frame, and
-    entropy-decodes ONLY the sampled frames with the certified JPEG
-    decoder (_parse_jpeg) — per-frame coefficient statistics reduce to
-    doc_id/frame arithmetic the DuckDB oracle recomputes, so a container
-    mis-walk, a wrong sample stride, a frame/seed mismatch, or any
-    entropy-decode drift fails the value hash. Blobs never leave their
-    partition (mapInPandas, the mm_decode shape); sampling-before-decode
-    is the point at 10^12 scale — the JPEG work is 1/k of the frames."""
-
-    def encode(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            blobs = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w_ = 8 * (1 + d % 2)
-                n_frames = 4 + d % 5
-                frames = []
-                for f in range(n_frames):
-                    s = VIDEO_SEED_A * d + VIDEO_SEED_B * f
-                    frames.append(_encode_jpeg(
-                        w_, 8, _jpeg_blocks_for_doc(s, w_ // 8)))
-                blobs.append(_encode_avi_mjpeg(w_, 8, frames))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": blobs})
-
-    def decode(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["media"]):
-                m = _parse_avi_mjpeg(bytes(blob))
-                for f, frame in enumerate(m["frames"]):
-                    if f % VIDEO_SAMPLE_K:
-                        continue
-                    j = _parse_jpeg(frame)
-                    acs = [v for blk in j["blocks"]
-                           for z, v in blk.items() if z > 0]
-                    rows.append({
-                        "doc_id": int(doc_id),
-                        "frame_idx": f,
-                        "n_frames": m["n_frames_hdr"],
-                        "width": j["width"],
-                        "height": j["height"],
-                        "dc_sum_q": sum(b.get(0, 0) for b in j["blocks"]),
-                        "ac_sum_q": sum(acs),
-                        "n_ac_nonzero": len(acs),
-                    })
-            yield pd.DataFrame(
-                rows, columns=[x.name for x in MM_VIDEO_SCHEMA.fields]
-            )
-
-    media = (
-        _doc_ids_parallel(spark, sf)
-        .mapInPandas(encode, "doc_id long, media binary")
-    )
-    return media.mapInPandas(decode, MM_VIDEO_SCHEMA)
-
-
-def mm_video_frames_sql() -> str:
-    return f"""
-      WITH base AS (
-        SELECT doc_id,
-               4 + doc_id % 5 AS n_frames,
-               8 * (1 + doc_id % 2) AS width,
-               1 + doc_id % 2 AS nb
-        FROM documents),
-      frames AS (
-        SELECT doc_id, n_frames, width, nb,
-               unnest(range(0, n_frames)) AS f
-        FROM base),
-      samp AS (SELECT * FROM frames WHERE f % {VIDEO_SAMPLE_K} = 0),
-      blocks AS (
-        SELECT doc_id, f, n_frames, width, nb,
-               {VIDEO_SEED_A} * doc_id + {VIDEO_SEED_B} * f AS s,
-               unnest(range(0, nb)) AS b
-        FROM samp)
-      SELECT doc_id, f AS frame_idx,
-             CAST(n_frames AS BIGINT) AS n_frames,
-             CAST(width AS BIGINT) AS width,
-             CAST(8 AS BIGINT) AS height,
-             sum((s + 7 * b) % 64 - 32) AS dc_sum_q,
-             sum(((s + 3 * b) % 15 - 7)
-                 + ((s + b) % 3 - 1)
-                 + ((s + 2 * b) % 5 - 2)) AS ac_sum_q,
-             sum(CASE WHEN (s + 3 * b) % 15 <> 7 THEN 1 ELSE 0 END
-                 + CASE WHEN (s + b) % 3 <> 1 THEN 1 ELSE 0 END
-                 + CASE WHEN (s + 2 * b) % 5 <> 2 THEN 1 ELSE 0 END)
-               AS n_ac_nonzero
-      FROM blocks
-      GROUP BY doc_id, f, n_frames, width, nb
-    """
-
-
-
-
-VFP_DC_SHIFT = 5   # planted re-encode brightness delta (DC-coefficient units)
-
-
-def mm_vfp_pairs(spark: SparkSession, sf: str) -> DataFrame:
-    """Video near-dup pairs by TEMPORAL fingerprint — the third leg of
-    the multimodal dedup family (image mm_phash_pairs: spatial dHash;
-    audio mm_afp_pairs: energy-delta): per video, demux + sample frames
-    (the mm_video_frames path), per-frame DC sum from the real JPEG
-    entropy decode, fingerprint = the CONSECUTIVE-FRAME DELTAS of those
-    sums — a uniform brightness re-encode shifts every frame's DC by the
-    same amount, so the deltas are invariant (the same reason real video
-    fingerprints use temporal differences). Planted copies: doc_id%6==2
-    gets a +VFP_DC_SHIFT re-encode (the shift must CANCEL), doc_id%6==5
-    a bit-identical re-mux; both must pair with their original, distinct
-    videos must not (closed-form pytest). Pairing is the D1 exact shape
-    on the delta-digest (md5 of the ordered delta string), bucket-capped.
-
-    Scale shape: fingerprints are one mapInPandas pass (blobs stay in
-    their partition) + one groupBy per video; the pair join is
-    digest-bucketed (never all-pairs), Σ|bucket|² capped. The oracle
-    recomputes every frame's DC sum, the deltas, the digest and the
-    pair join from doc_id arithmetic."""
-
-    def encode(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            blobs = []
-            for seed, shift in zip(pdf["seed"], pdf["shift"]):
-                seed, shift = int(seed), int(shift)
-                import hashlib
-
-                w_ = 8 * (1 + seed % 2)
-                frames = []
-                for f in range(4 + seed % 5):
-                    s = VIDEO_SEED_A * seed + VIDEO_SEED_B * f
-                    blocks = _jpeg_blocks_for_doc(s, w_ // 8)
-                    for b, blk in enumerate(blocks):
-                        blk[0] = blk.get(0, 0) + shift
-                        # md5-derived extra AC at zigzag 7: widens the
-                        # planted coefficient space so distinct videos
-                        # get distinct temporal signatures (the modular
-                        # plant alone lives in s mod 15 x s mod 64 —
-                        # coarse enough for chance signature clashes)
-                        h = hashlib.md5(f"{s}|{b}".encode()).hexdigest()
-                        v4 = (ord(h[0]) * 256 + ord(h[1])) % 201 - 100
-                        if v4:
-                            blk[7] = v4
-                    frames.append(_encode_jpeg(w_, 8, blocks))
-                blobs.append(_encode_avi_mjpeg(w_, 8, frames))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "media": blobs}
-            )
-
-    def decode(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["media"]):
-                m = _parse_avi_mjpeg(bytes(blob))
-                for f, frame in enumerate(m["frames"]):
-                    if f % VIDEO_SAMPLE_K:
-                        continue
-                    j = _parse_jpeg(frame)
-                    acs = [v for blk in j["blocks"]
-                           for z, v in blk.items() if z > 0]
-                    rows.append({
-                        "doc_id": int(doc_id),
-                        "frame_idx": f,
-                        "dc_sum": sum(
-                            b.get(0, 0) for b in j["blocks"]
-                        ),
-                        "ac_sum": sum(acs),
-                        "n_ac": len(acs),
-                    })
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "frame_idx", "dc_sum", "ac_sum",
-                         "n_ac"],
-            )
-
-    d = _doc_ids_parallel(spark, sf)
-    base = d.select(
-        "doc_id", F.col("doc_id").alias("seed"),
-        F.lit(0).alias("shift"),
-    )
-    cp_shift = d.filter(F.col("doc_id") % 6 == 2).select(
-        (F.col("doc_id") + MINHASH_PLANT_OFFSET).alias("doc_id"),
-        F.col("doc_id").alias("seed"),
-        F.lit(VFP_DC_SHIFT).alias("shift"),
-    )
-    cp_remux = d.filter(F.col("doc_id") % 6 == 5).select(
-        (F.col("doc_id") + MINHASH_PLANT_OFFSET).alias("doc_id"),
-        F.col("doc_id").alias("seed"),
-        F.lit(0).alias("shift"),
-    )
-    vids = base.unionAll(cp_shift).unionAll(cp_remux)
-    per_frame = vids.mapInPandas(
-        encode, "doc_id long, media binary"
-    ).mapInPandas(
-        decode,
-        "doc_id long, frame_idx long, dc_sum long, ac_sum long,"
-        " n_ac long",
-    )
-    from pyspark.sql.window import Window
-
-    # per-frame token: the two SHIFT-INVARIANT stats verbatim (a DC-only
-    # brightness re-encode never touches AC) + the consecutive DC delta
-    # (shift cancels); the last frame carries 'x' in the delta slot so
-    # frame count is part of the signature too
-    w = Window.partitionBy("doc_id").orderBy("frame_idx")
-    toks = per_frame.select(
-        "doc_id", "frame_idx",
-        F.concat_ws(
-            ".",
-            F.col("ac_sum").cast("string"),
-            F.col("n_ac").cast("string"),
-            F.coalesce(
-                (F.lead("dc_sum").over(w) - F.col("dc_sum"))
-                .cast("string"),
-                F.lit("x"),
-            ),
-        ).alias("tok"),
-    )
-    fp = toks.groupBy("doc_id").agg(
-        F.md5(
-            F.concat_ws(
-                ",",
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.struct(
-                                F.col("frame_idx").alias("f"),
-                                F.col("tok").alias("t"),
-                            )
-                        )
-                    ),
-                    lambda x: x["t"],
-                ),
-            ).cast("binary")
-        ).alias("digest")
-    )
-    ok = fp.groupBy("digest").agg(
-        F.count(F.lit(1)).alias("n")
-    ).filter(F.col("n") <= MAX_LSH_BUCKET_SIZE).select("digest")
-    fp_ok = fp.join(ok, "digest")
-    a = fp_ok.select(F.col("digest"), F.col("doc_id").alias("a_id"))
-    b = fp_ok.select(F.col("digest").alias("digest_b"),
-                     F.col("doc_id").alias("b_id"))
-    return (
-        a.join(b, (F.col("digest") == F.col("digest_b"))
-               & (F.col("a_id") < F.col("b_id")))
-        .select("a_id", "b_id")
-    )
-
-
-def mm_vfp_pairs_sql() -> str:
-    A, B, K = VIDEO_SEED_A, VIDEO_SEED_B, VIDEO_SAMPLE_K
-    return f"""
-      WITH vids AS (
-        SELECT doc_id, doc_id AS seed, 0 AS shift FROM documents
-        UNION ALL
-        SELECT doc_id + {MINHASH_PLANT_OFFSET}, doc_id, {VFP_DC_SHIFT}
-        FROM documents WHERE doc_id % 6 = 2
-        UNION ALL
-        SELECT doc_id + {MINHASH_PLANT_OFFSET}, doc_id, 0
-        FROM documents WHERE doc_id % 6 = 5),
-      geo AS (
-        SELECT doc_id, seed, shift,
-               4 + seed % 5 AS n_frames, 1 + seed % 2 AS nb
-        FROM vids),
-      sampf AS (
-        SELECT * FROM (
-          SELECT doc_id, seed, shift, nb,
-                 unnest(range(0, n_frames)) AS f
-          FROM geo) t
-        WHERE f % {K} = 0),
-      dc AS (
-        SELECT doc_id, f,
-               sum((s + 7 * b) % 64 - 32 + shift) AS dc_sum,
-               sum(((s + 3 * b) % 15 - 7)
-                   + ((s + b) % 3 - 1)
-                   + ((s + 2 * b) % 5 - 2)
-                   + v4) AS ac_sum,
-               sum(CASE WHEN (s + 3 * b) % 15 <> 7 THEN 1 ELSE 0 END
-                   + CASE WHEN (s + b) % 3 <> 1 THEN 1 ELSE 0 END
-                   + CASE WHEN (s + 2 * b) % 5 <> 2 THEN 1 ELSE 0 END
-                   + CASE WHEN v4 <> 0 THEN 1 ELSE 0 END)
-                 AS n_ac
-        FROM (SELECT doc_id, shift, f, s, b,
-                     (ascii(substr(md5(CAST(s AS VARCHAR) || '|'
-                                       || CAST(b AS VARCHAR)), 1, 1))
-                      * 256
-                      + ascii(substr(md5(CAST(s AS VARCHAR) || '|'
-                                         || CAST(b AS VARCHAR)), 2, 1)))
-                     % 201 - 100 AS v4
-              FROM (SELECT doc_id, seed, shift, f,
-                           {A} * seed + {B} * f AS s,
-                           unnest(range(0, nb)) AS b
-                    FROM sampf) u0) u
-        GROUP BY doc_id, f),
-      toks AS (
-        SELECT doc_id, f,
-               CAST(ac_sum AS VARCHAR) || '.'
-               || CAST(n_ac AS VARCHAR) || '.'
-               || coalesce(CAST(
-                    lead(dc_sum) OVER (PARTITION BY doc_id ORDER BY f)
-                    - dc_sum AS VARCHAR), 'x') AS tok
-        FROM dc),
-      fp AS (
-        SELECT doc_id, md5(string_agg(tok, ',' ORDER BY f)) AS digest
-        FROM toks GROUP BY doc_id),
-      ok AS (SELECT digest FROM fp GROUP BY digest
-             HAVING count(*) <= {MAX_LSH_BUCKET_SIZE})
-      SELECT a.doc_id AS a_id, b.doc_id AS b_id
-      FROM fp a
-      JOIN ok ON ok.digest = a.digest
-      JOIN fp b ON b.digest = a.digest AND a.doc_id < b.doc_id
-    """
-
-
-def mm_decode_sql() -> str:
-    return """
-      SELECT doc_id,
-        CASE WHEN doc_id % 2 = 0 THEN 'image' ELSE 'audio' END AS media_type,
-        CASE WHEN doc_id % 2 = 0
-             THEN 54 + ((4 + doc_id % 29) * 3 + 3) // 4 * 4 * (3 + doc_id % 17)
-             ELSE 44 + (50 + doc_id % 100) * 2 END AS n_bytes,
-        CASE WHEN doc_id % 2 = 0 THEN 4 + doc_id % 29 ELSE 0 END AS width,
-        CASE WHEN doc_id % 2 = 0 THEN 3 + doc_id % 17 ELSE 0 END AS height,
-        CASE WHEN doc_id % 2 = 0 THEN 0
-             ELSE 8000 + (doc_id % 3) * 4000 END AS sample_rate,
-        CASE WHEN doc_id % 2 = 0 THEN 0
-             ELSE 50 + doc_id % 100 END AS n_samples,
-        CASE WHEN doc_id % 2 = 0 THEN 24 ELSE 16 END AS bit_depth
-      FROM documents
-    """
-
-
-MM_DS_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("media_type", StringType()),
-        StructField("out_w", LongType()),
-        StructField("out_h", LongType()),
-        StructField("out_samples", LongType()),
-        StructField("byte_sum", LongType()),
-    ]
-)
-
-MM_IMG_FACTOR = 2   # thumbnail: every 2nd pixel each axis (4x fewer px)
-MM_AUD_FACTOR = 4   # audio: every 4th PCM sample
-
-
-def downsample_media(media: DataFrame) -> DataFrame:
-    """Real content downsampling over an opaque binary media column — the
-    feature-extraction step after decode in a multimodal training
-    pipeline: BMP → nearest-neighbor thumbnail (every MM_IMG_FACTOR-th
-    pixel per axis, the stride walk a resize kernel does), WAV → every
-    MM_AUD_FACTOR-th PCM sample (the frame-sampling shape for audio/video).
-    Emits output dims plus the integer sum of the SAMPLED bytes —
-    computed from the actual blob bytes at the resampled positions, so a
-    wrong stride, a padding mistake, or an off-by-one in the sample
-    positions changes the answer (unlike metadata-only decode keys).
-
-    Scale posture: mapInPandas over Arrow batches, one narrow Python pass
-    per blob, no shuffle — blobs never leave the partition that read
-    them; output is a few scalars per blob (the thumbnail bytes would be
-    written alongside in production, same partitioning)."""
-
-    def ds(batches):
-        import struct
-
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["media"]):
-                b = bytes(blob)
-                if b[:2] == b"BM":
-                    off, = struct.unpack_from("<I", b, 10)
-                    width, height = struct.unpack_from("<ii", b, 18)
-                    height = abs(height)
-                    stride = (width * 3 + 3) // 4 * 4
-                    out_w = (width + MM_IMG_FACTOR - 1) // MM_IMG_FACTOR
-                    out_h = (height + MM_IMG_FACTOR - 1) // MM_IMG_FACTOR
-                    s = 0
-                    for y in range(out_h):
-                        base = off + y * MM_IMG_FACTOR * stride
-                        for x in range(out_w):
-                            pos = base + x * MM_IMG_FACTOR * 3
-                            s += b[pos] + b[pos + 1] + b[pos + 2]
-                    rows.append({
-                        "doc_id": int(doc_id), "media_type": "image",
-                        "out_w": out_w, "out_h": out_h,
-                        "out_samples": 0, "byte_sum": s,
-                    })
-                elif b[:4] == b"RIFF" and b[8:12] == b"WAVE":
-                    data_size, = struct.unpack_from("<I", b, 40)
-                    n = data_size // 2
-                    out_n = (n + MM_AUD_FACTOR - 1) // MM_AUD_FACTOR
-                    s = 0
-                    for i in range(out_n):
-                        pos = 44 + i * MM_AUD_FACTOR * 2
-                        s += b[pos] + 256 * b[pos + 1]
-                    rows.append({
-                        "doc_id": int(doc_id), "media_type": "audio",
-                        "out_w": 0, "out_h": 0,
-                        "out_samples": out_n, "byte_sum": s,
-                    })
-                else:
-                    raise ValueError("unsupported media magic")
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in MM_DS_SCHEMA.fields]
-            )
-
-    return media.mapInPandas(ds, MM_DS_SCHEMA)
-
-
-def mm_downsample(spark: SparkSession, sf: str) -> DataFrame:
-    """Thumbnail + audio-frame-sample over the encoded media column. The
-    oracle recomputes the sampled-byte sum in CLOSED FORM from the
-    generators (BMP byte i = (doc_id+i)%256, WAV byte i = (7·doc_id+i)%256)
-    at exactly the resampled offsets — certifying the operator touched
-    precisely the right bytes of the real blobs."""
-    return downsample_media(_media_column_df(spark, sf))
-
-
-def mm_downsample_sql() -> str:
-    f_img, f_aud = MM_IMG_FACTOR, MM_AUD_FACTOR
-    return f"""
-      WITH img AS (
-        SELECT doc_id, 4 + doc_id % 29 AS w, 3 + doc_id % 17 AS h
-        FROM documents WHERE doc_id % 2 = 0),
-      imgdims AS (
-        SELECT doc_id, (w * 3 + 3) // 4 * 4 AS stride,
-               (w + {f_img} - 1) // {f_img} AS out_w,
-               (h + {f_img} - 1) // {f_img} AS out_h
-        FROM img),
-      imgsum AS (
-        SELECT i.doc_id, i.out_w, i.out_h,
-               SUM((i.doc_id + {f_img} * ty.y * i.stride
-                    + {f_img} * 3 * tx.x + tj.j) % 256) AS byte_sum
-        FROM imgdims i,
-             unnest(range(0, i.out_h)) AS ty(y),
-             unnest(range(0, i.out_w)) AS tx(x),
-             unnest([0, 1, 2]) AS tj(j)
-        GROUP BY 1, 2, 3),
-      aud AS (
-        SELECT doc_id, 50 + doc_id % 100 AS n
-        FROM documents WHERE doc_id % 2 = 1),
-      auddims AS (
-        SELECT doc_id, n, (n + {f_aud} - 1) // {f_aud} AS out_n FROM aud),
-      audsum AS (
-        SELECT a.doc_id, a.out_n,
-               SUM((7 * a.doc_id + {2 * f_aud} * ti.i) % 256
-                   + 256 * ((7 * a.doc_id + {2 * f_aud} * ti.i + 1) % 256))
-                 AS byte_sum
-        FROM auddims a, unnest(range(0, a.out_n)) AS ti(i)
-        GROUP BY 1, 2)
-      SELECT doc_id, 'image' AS media_type,
-             CAST(out_w AS BIGINT) AS out_w, CAST(out_h AS BIGINT) AS out_h,
-             CAST(0 AS BIGINT) AS out_samples,
-             CAST(byte_sum AS BIGINT) AS byte_sum
-      FROM imgsum
-      UNION ALL
-      SELECT doc_id, 'audio', 0, 0, CAST(out_n AS BIGINT),
-             CAST(byte_sum AS BIGINT)
-      FROM audsum
-    """
-
-
-def mm_decode_stub_sql() -> str:
-    return """
-      SELECT doc_id,
-        CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
-                        ELSE 'video' END AS media_type,
-        strlen(text) AS n_bytes,
-        160 + (strlen(text) % 8) * 80 AS width,
-        120 + (strlen(text) % 6) * 60 AS height,
-        CASE WHEN doc_id % 3 = 2 THEN strlen(text) % 24 + 1 ELSE 1 END
-          AS n_frames
-      FROM documents
-    """
-
-
-# ------------------------------------------------- perceptual-hash dedup
-#
-# The multimodal near-dup tier: dHash (difference hash) over image blobs +
-# banded Hamming-distance candidate pairs — the image analogue of the
-# MinHash/LSH text tier (D2/D2b). A multimodal training pipeline dedups
-# images that survive byte-level exact dedup because they were re-encoded,
-# resampled, or brightness-adjusted between crawls; dHash is invariant to
-# all three (it compares ADJACENT cell luminance, so any monotone global
-# shift and any integer resample that preserves cell means leaves every
-# bit unchanged).
-
-PHASH_GRID_ROWS = 8      # 8 x 9 grid of cells -> 8 x 8 = 64 dHash bits
-PHASH_GRID_COLS = 9
-PHASH_BANDS = 4          # 4 x 16-bit bands for the LSH candidate join
-PHASH_HAMMING_MAX = 6    # near-dup decision threshold (of 64 bits)
-PHASH_BASE_W = 18        # planted base image: 18x16 px (2x2-px cells)
-PHASH_BASE_H = 16
-PHASH_SHIFT = 24         # planted brightness delta; px<=215 so never wraps
-
-
-def _phash_gray(seed: int, p: int) -> int:
-    """Deterministic per-pixel gray value in [16, 215]: md5 of 'seed|p'
-    truncated to 16 bits then reduced mod 200 — the same md5-as-portable-
-    PRF trick the MinHash tier uses, because LINEAR congruential mixes
-    (tried first) leave adjacent-cell comparisons correlated ACROSS seeds
-    and flood the candidate join with structural near-collisions. The
-    oracle recomputes this exact value via DuckDB's md5() + hex cast."""
-    import hashlib
-
-    h = hashlib.md5(f"{seed}|{p}".encode()).hexdigest()
-    return int(h[:4], 16) % 200 + 16
-
-
-def _encode_bmp_gray(width: int, height: int, vals: list[int]) -> bytes:
-    """Spec-conformant 24bpp BI_RGB BMP from per-pixel gray values (r=g=b),
-    vals in stored-row order, real 4-byte row padding (W=18 -> stride 56,
-    2 pad bytes per row — a parser that ignores stride fails loudly)."""
-    import struct
-
-    stride = (width * 3 + 3) // 4 * 4
-    img_size = stride * height
-    header = struct.pack("<2sIHHI", b"BM", 54 + img_size, 0, 0, 54)
-    info = struct.pack(
-        "<IiiHHIIiiII", 40, width, height, 1, 24, 0, img_size, 2835, 2835,
-        0, 0,
-    )
-    rows = bytearray()
-    pad = b"\x00" * (stride - width * 3)
-    for y in range(height):
-        for x in range(width):
-            v = vals[y * width + x]
-            rows += bytes((v, v, v))
-        rows += pad
-    return header + info + bytes(rows)
-
-
-def _dhash_bands_from_bmp(blob: bytes) -> list[int]:
-    """dHash from the ACTUAL BMP bytes: parse header (offset/dims/stride),
-    sum the 3 channel bytes of every pixel into a PHASH_GRID_ROWS x
-    PHASH_GRID_COLS cell grid, then bit (r,c) = cellsum(r,c) <
-    cellsum(r,c+1), packed into PHASH_BANDS 16-bit band values (band b =
-    grid rows 2b..2b+1, bit position (r%2)*8+c). Comparing SUMS (equal
-    cell pixel-count within an image) avoids division entirely, so a k x k
-    integer upscale — cell sums all scale by k² — and a global brightness
-    shift — all sums shift equally — provably preserve every bit.
-    Requires dims divisible by the grid (thumbnails are normalized
-    upstream by the downsample stage); raises otherwise."""
-    import struct
-
-    (off,) = struct.unpack_from("<I", blob, 10)
-    width, height = struct.unpack_from("<ii", blob, 18)
-    height = abs(height)
-    if width % PHASH_GRID_COLS or height % PHASH_GRID_ROWS:
-        raise ValueError(
-            f"dHash needs dims divisible by {PHASH_GRID_COLS}x"
-            f"{PHASH_GRID_ROWS}, got {width}x{height}"
-        )
-    stride = (width * 3 + 3) // 4 * 4
-    cw = width // PHASH_GRID_COLS
-    ch = height // PHASH_GRID_ROWS
-    sums = [[0] * PHASH_GRID_COLS for _ in range(PHASH_GRID_ROWS)]
-    for r in range(PHASH_GRID_ROWS):
-        for c in range(PHASH_GRID_COLS):
-            s = 0
-            for dy in range(ch):
-                base = off + (r * ch + dy) * stride + c * cw * 3
-                for dx in range(cw):
-                    pos = base + dx * 3
-                    s += blob[pos] + blob[pos + 1] + blob[pos + 2]
-            sums[r][c] = s
-    bands = []
-    for b in range(PHASH_BANDS):
-        v = 0
-        for r in (2 * b, 2 * b + 1):
-            for c in range(PHASH_GRID_COLS - 1):
-                if sums[r][c] < sums[r][c + 1]:
-                    v |= 1 << ((r % 2) * 8 + c)
-        bands.append(v)
-    return bands
-
-
-def phash_media(media: DataFrame) -> DataFrame:
-    """(doc_id, media: binary) -> (doc_id, b0..b3): the 64-bit dHash as 4
-    positive 16-bit band values (sidestepping signed-bigint shift
-    portability). Reusable over ANY DataFrame with a BMP media column.
-
-    Scale posture: mapInPandas over Arrow batches, one narrow Python pass,
-    no shuffle — blobs never leave their partition; output is 4 small ints
-    per image, which is what shuffles into the band join."""
-
-    def hash_batch(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["media"]):
-                b0, b1, b2, b3 = _dhash_bands_from_bmp(bytes(blob))
-                rows.append({
-                    "doc_id": int(doc_id),
-                    "b0": b0, "b1": b1, "b2": b2, "b3": b3,
-                })
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "b0", "b1", "b2", "b3"]
-            )
-
-    return media.mapInPandas(
-        hash_batch, "doc_id long, b0 long, b1 long, b2 long, b3 long"
-    )
-
-
-def phash_candidate_pairs(
-    hashes: DataFrame,
-    max_hamming: int = PHASH_HAMMING_MAX,
-    max_bucket_size: int | None = MAX_LSH_BUCKET_SIZE,
-) -> DataFrame:
-    """Banded Hamming near-dup pairs over dHash values — the D2b bucket
-    join re-instantiated for images. Candidate recall argument is the
-    standard LSH-banding one: max_hamming < PHASH_BANDS guarantees a
-    clean shared band by pigeonhole; for max_hamming in (PHASH_BANDS-1,
-    2*PHASH_BANDS*k) recall is probabilistic exactly as in MinHash
-    banding (a near-dup pair whose bit flips happen to touch all 4 bands
-    is missed — acceptable for the same reason the text tier accepts
-    band-miss, and the planted gate dups sit at Hamming 0 where recall
-    is certain). Bucket-size cap + broadcast anti-join exactly as
-    minhash_candidate_pairs — never O(n²)."""
-    # The hash table feeds the cap aggregate AND both sides of the band
-    # self-join — 3-4 plan references, each of which would re-run the
-    # upstream Python fingerprint pass over every blob (measured: 12.6s
-    # vs ~5s for mm_phash_pairs at sf0.1). Materialize the 5-longs-per-
-    # image table once; at any corpus size this is strictly cheaper than
-    # fingerprinting the blobs twice more (the hits_exact precedent).
-    hashes = hashes.localCheckpoint(eager=True)
-    bands = hashes.select(
-        "doc_id", "b0", "b1", "b2", "b3",
-        F.posexplode(
-            F.array(F.col("b0"), F.col("b1"), F.col("b2"), F.col("b3"))
-        ).alias("band_id", "band_val"),
-    )
-    if max_bucket_size is not None:
-        over_cap = (
-            bands.groupBy("band_id", "band_val")
-            .agg(F.count(F.lit(1)).alias("_bsz"))
-            .filter(F.col("_bsz") > max_bucket_size)
-            .select("band_id", "band_val")
-        )
-        bands = bands.join(
-            F.broadcast(over_cap), ["band_id", "band_val"], "left_anti"
-        )
-    a, b = bands.alias("a"), bands.alias("b")
-    hamming = sum(
-        F.bit_count(
-            F.col(f"a.b{i}").bitwiseXOR(F.col(f"b.b{i}"))
-        )
-        for i in range(PHASH_BANDS)
-    )
-    return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("a_id"),
-            F.col("b.doc_id").alias("b_id"),
-            hamming.cast("long").alias("hamming"),
-        )
-        .dropDuplicates(["a_id", "b_id"])
-        .filter(F.col("hamming") <= max_hamming)
-    )
-
-
-def _phash_media_df(spark: SparkSession, sf: str) -> DataFrame:
-    """Deterministic image corpus with planted perceptual near-dups: every
-    doc gets an 18x16 md5-pixel BMP; doc_id % 6 == 0 additionally plants a
-    BRIGHTNESS-SHIFTED copy (+24/px, byte-distinct, dHash-identical) and
-    doc_id % 6 == 3 a 2x NEAREST-NEIGHBOR-RESAMPLED re-encode (36x32,
-    different stride/padding, dHash-identical) at doc_id +
-    MINHASH_PLANT_OFFSET (same never-alias-a-real-id guard as the text
-    plants, tests/test_datapipe_guard.py)."""
-
-    def encode(batches):
-        import pandas as pd
-
-        W, H = PHASH_BASE_W, PHASH_BASE_H
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                vals = [_phash_gray(d, p) for p in range(W * H)]
-                ids.append(d)
-                blobs.append(_encode_bmp_gray(W, H, vals))
-                if d % 6 == 0:
-                    ids.append(d + MINHASH_PLANT_OFFSET)
-                    blobs.append(
-                        _encode_bmp_gray(
-                            W, H, [v + PHASH_SHIFT for v in vals]
-                        )
-                    )
-                elif d % 6 == 3:
-                    up = [
-                        vals[(y // 2) * W + (x // 2)]
-                        for y in range(2 * H)
-                        for x in range(2 * W)
-                    ]
-                    ids.append(d + MINHASH_PLANT_OFFSET)
-                    blobs.append(_encode_bmp_gray(2 * W, 2 * H, up))
-            yield pd.DataFrame({"doc_id": ids, "media": blobs})
-
-    return (
-        _doc_ids_parallel(spark, sf)
-        .mapInPandas(encode, "doc_id long, media binary")
-    )
-
-
-def mm_phash_pairs(spark: SparkSession, sf: str) -> DataFrame:
-    """Gate key for the multimodal near-dup tier END-TO-END: encode pass
-    materializes real BMP blobs (originals + brightness-shifted and
-    2x-resampled planted copies), phash_media() computes dHash from the
-    ACTUAL bytes, phash_candidate_pairs() recovers every planted pair at
-    Hamming 0 while the ~20 chance band collisions between distinct
-    images (measured at sf0.01) are Hamming-REJECTED — so the candidate
-    join, the cap, and the threshold all do real work under the oracle's
-    value-hash gate. The oracle recomputes pixels, cell sums, band values
-    and the pair join arithmetically from doc_id."""
-    return phash_candidate_pairs(phash_media(_phash_media_df(spark, sf)))
-
-
-def mm_phash_pairs_sql() -> str:
-    W, H = PHASH_BASE_W, PHASH_BASE_H
-    R, C = PHASH_GRID_ROWS, PHASH_GRID_COLS
-    xors = " + ".join(
-        f"bit_count(xor(wa.b{i}, wb.b{i}))" for i in range(PHASH_BANDS)
-    )
-    return f"""
-      WITH imgs AS (
-        SELECT doc_id, doc_id AS seed, 0 AS shift, 1 AS scale
-        FROM documents
-        UNION ALL
-        SELECT doc_id + {MINHASH_PLANT_OFFSET}, doc_id, {PHASH_SHIFT}, 1
-        FROM documents WHERE doc_id % 6 = 0
-        UNION ALL
-        SELECT doc_id + {MINHASH_PLANT_OFFSET}, doc_id, 0, 2
-        FROM documents WHERE doc_id % 6 = 3),
-      cells AS MATERIALIZED (
-        SELECT i.doc_id, r.r, c.c,
-               SUM(3 * ((('0x' || substr(md5(i.seed || '|' ||
-                     (((r.r * 2 * i.scale + dy.dy) // i.scale) * {W}
-                      + (c.c * 2 * i.scale + dx.dx) // i.scale)),
-                     1, 4))::BIGINT) % 200 + 16 + i.shift)) AS cs
-        FROM imgs i,
-             unnest(range(0, {R})) AS r(r),
-             unnest(range(0, {C})) AS c(c),
-             unnest(range(0, 2 * i.scale)) AS dy(dy),
-             unnest(range(0, 2 * i.scale)) AS dx(dx)
-        GROUP BY 1, 2, 3),
-      bits AS (
-        SELECT a.doc_id, a.r, a.c, CAST(a.cs < b.cs AS BIGINT) AS bit
-        FROM cells a
-        JOIN cells b ON a.doc_id = b.doc_id AND a.r = b.r AND b.c = a.c + 1
-        WHERE a.c < {C - 1}),
-      hashes AS MATERIALIZED (
-        SELECT doc_id, r // 2 AS band_id,
-               SUM(bit * (CAST(1 AS BIGINT) << ((r % 2) * 8 + c)))
-                 AS band_val
-        FROM bits GROUP BY 1, 2),
-      wide AS (
-        SELECT doc_id,
-               MAX(CASE WHEN band_id = 0 THEN band_val END) AS b0,
-               MAX(CASE WHEN band_id = 1 THEN band_val END) AS b1,
-               MAX(CASE WHEN band_id = 2 THEN band_val END) AS b2,
-               MAX(CASE WHEN band_id = 3 THEN band_val END) AS b3
-        FROM hashes GROUP BY doc_id),
-      ok AS (SELECT band_id, band_val FROM hashes
-             GROUP BY 1, 2 HAVING count(*) <= {MAX_LSH_BUCKET_SIZE}),
-      cand AS (
-        SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-        FROM hashes a
-        JOIN ok ON ok.band_id = a.band_id AND ok.band_val = a.band_val
-        JOIN hashes b ON a.band_id = b.band_id
-             AND a.band_val = b.band_val AND a.doc_id < b.doc_id)
-      SELECT c.a_id, c.b_id, CAST({xors} AS BIGINT) AS hamming
-      FROM cand c
-      JOIN wide wa ON wa.doc_id = c.a_id
-      JOIN wide wb ON wb.doc_id = c.b_id
-      WHERE {xors} <= {PHASH_HAMMING_MAX}
-    """
-
-
-# ------------------------------------------ audio-fingerprint near-dup
-
-AFP_WIN = 16                             # samples per energy window
-AFP_BITS = 64                            # fingerprint bits (energy deltas)
-AFP_N_SAMPLES = (AFP_BITS + 1) * AFP_WIN  # 65 windows -> 64 delta bits
-AFP_AMP = 15000   # |sample| < 15000 so phase inversion never overflows
-
-
-def _afp_sample(seed: int, i: int) -> int:
-    """Deterministic PCM sample in [-15000, 14999] — md5-as-portable-PRF
-    exactly as _phash_gray, because the (7·seed+j) mod 256 byte ramp the
-    energy key uses is PERIODIC (period 128 samples = 8 windows): every
-    doc's energy-delta bits would repeat with period 8, collapsing the
-    whole corpus onto a handful of fingerprints and flooding the band
-    join. iid samples make distinct docs' bits fair coins (expected
-    Hamming 32), so chance band collisions are rare and Hamming-rejected."""
-    import hashlib
-
-    h = hashlib.md5(f"{seed}~{i}".encode()).hexdigest()
-    return int(h[:4], 16) % (2 * AFP_AMP) - AFP_AMP
-
-
-def _encode_wav_pcm(
-    sample_rate: int, samples: list[int], junk_chunk: bool = False
-) -> bytes:
-    """Spec-conformant mono 16-bit WAV from explicit samples;
-    junk_chunk=True inserts a LIST/INFO chunk between fmt and data —
-    byte-distinct container, identical audio (the metadata-variant
-    near-dup every crawl sees; also the regression trap for a parser
-    that assumes the 44-byte canonical layout)."""
-    import struct
-
-    body = struct.pack(f"<{len(samples)}h", *samples)
-    extra = b""
-    if junk_chunk:
-        info = b"INFO" + b"ISFT" + struct.pack("<I", 6) + b"mxspg\x00"
-        extra = b"LIST" + struct.pack("<I", len(info)) + info
-    hdr = struct.pack(
-        "<4sI4s4sIHHIIHH4sI",
-        b"RIFF", 36 + len(extra) + len(body), b"WAVE",
-        b"fmt ", 16, 1, 1, sample_rate, sample_rate * 2, 2, 16,
-        b"data", len(body),
-    )
-    # data header must FOLLOW the extra chunk: splice it after fmt
-    return hdr[:36] + extra + hdr[36:] + body
-
-
-def afp_media(media: DataFrame) -> DataFrame:
-    """(doc_id, media: WAV binary) -> (doc_id, b0..b3): the 64-bit
-    energy-delta audio fingerprint (Haitsma-Kalker shape, energy-only):
-    bit w = E(w) < E(w+1) over {AFP_BITS}+1 windows of {AFP_WIN} samples,
-    packed into 4 x 16-bit bands (the phash band layout, so the SAME
-    banded candidate join serves both modalities). Energy Σs² is
-    phase-inversion-invariant (s -> -s) and container-invariant by
-    construction — the two classic byte-distinct audio dups.
-
-    Scale posture: mapInPandas, one Python pass, blobs never leave
-    their partition; only 4 small ints per clip shuffle into the join."""
-
-    def fp_batch(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["media"]):
-                s = _wav_samples(bytes(blob))
-                e = [
-                    sum(x * x for x in s[w * AFP_WIN:(w + 1) * AFP_WIN])
-                    for w in range(AFP_BITS + 1)
-                ]
-                bands = []
-                for b in range(PHASH_BANDS):
-                    v = 0
-                    for k in range(16):
-                        if e[16 * b + k] < e[16 * b + k + 1]:
-                            v |= 1 << k
-                    bands.append(v)
-                rows.append({
-                    "doc_id": int(doc_id),
-                    "b0": bands[0], "b1": bands[1],
-                    "b2": bands[2], "b3": bands[3],
-                })
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "b0", "b1", "b2", "b3"]
-            )
-
-    return media.mapInPandas(
-        fp_batch, "doc_id long, b0 long, b1 long, b2 long, b3 long"
-    )
-
-
-def _afp_media_df(spark: SparkSession, sf: str) -> DataFrame:
-    """Deterministic audio corpus with planted near-dups: every doc gets
-    a {AFP_N_SAMPLES}-sample WAV of md5-PRF PCM; doc_id % 6 == 1 plants a
-    PHASE-INVERTED copy (s -> -s: every byte of the body differs, every
-    window energy identical) and doc_id % 6 == 4 a CONTAINER-variant
-    (LIST/INFO chunk spliced before data, identical PCM) at doc_id +
-    MINHASH_PLANT_OFFSET — both Hamming 0 by construction, both
-    impossible to catch with exact/byte dedup."""
-
-    def encode(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                samples = [_afp_sample(d, i) for i in range(AFP_N_SAMPLES)]
-                ids.append(d)
-                blobs.append(_encode_wav_pcm(8000, samples))
-                if d % 6 == 1:
-                    ids.append(d + MINHASH_PLANT_OFFSET)
-                    blobs.append(
-                        _encode_wav_pcm(8000, [-x for x in samples])
-                    )
-                elif d % 6 == 4:
-                    ids.append(d + MINHASH_PLANT_OFFSET)
-                    blobs.append(
-                        _encode_wav_pcm(8000, samples, junk_chunk=True)
-                    )
-            yield pd.DataFrame({"doc_id": ids, "media": blobs})
-
-    return (
-        _doc_ids_parallel(spark, sf)
-        .mapInPandas(encode, "doc_id long, media binary")
-    )
-
-
-def mm_afp_pairs(spark: SparkSession, sf: str) -> DataFrame:
-    """Gate key for audio near-dup END-TO-END: encode real WAVs
-    (originals + phase-inverted and container-variant planted copies),
-    afp_media() fingerprints from the ACTUAL bytes through the
-    chunk-walking parser, and the SAME banded Hamming join as the image
-    tier recovers every planted pair at Hamming 0 while chance band
-    collisions between distinct clips are Hamming-rejected. The oracle
-    recomputes samples, window energies, delta bits, bands and the pair
-    join arithmetically from doc_id (plants share their base's
-    fingerprint EXACTLY because energy is invariant under both
-    perturbations — the invariance is the thing being certified)."""
-    return phash_candidate_pairs(afp_media(_afp_media_df(spark, sf)))
-
-
-def mm_afp_pairs_sql() -> str:
-    xors = " + ".join(
-        f"bit_count(xor(wa.b{i}, wb.b{i}))" for i in range(PHASH_BANDS)
-    )
-    s = (
-        f"(('0x' || substr(md5(d.doc_id || '~' || i), 1, 4))::BIGINT"
-        f" % {2 * AFP_AMP} - {AFP_AMP})"
-    )
-    return f"""
-      WITH enr AS MATERIALIZED (
-        SELECT d.doc_id, i // {AFP_WIN} AS w, SUM({s} * {s}) AS e
-        FROM documents d, unnest(range(0, {AFP_N_SAMPLES})) AS t(i)
-        GROUP BY 1, 2),
-      bits AS (
-        SELECT a.doc_id, a.w, CAST(a.e < b.e AS BIGINT) AS bit
-        FROM enr a JOIN enr b ON a.doc_id = b.doc_id AND b.w = a.w + 1
-        WHERE a.w < {AFP_BITS}),
-      base AS (
-        SELECT doc_id, w // 16 AS band_id,
-               SUM(bit * (CAST(1 AS BIGINT) << (w % 16))) AS band_val
-        FROM bits GROUP BY 1, 2),
-      hashes AS MATERIALIZED (
-        SELECT doc_id, band_id, band_val FROM base
-        UNION ALL
-        SELECT doc_id + {MINHASH_PLANT_OFFSET}, band_id, band_val
-        FROM base WHERE doc_id % 6 IN (1, 4)),
-      wide AS (
-        SELECT doc_id,
-               MAX(CASE WHEN band_id = 0 THEN band_val END) AS b0,
-               MAX(CASE WHEN band_id = 1 THEN band_val END) AS b1,
-               MAX(CASE WHEN band_id = 2 THEN band_val END) AS b2,
-               MAX(CASE WHEN band_id = 3 THEN band_val END) AS b3
-        FROM hashes GROUP BY doc_id),
-      ok AS (SELECT band_id, band_val FROM hashes
-             GROUP BY 1, 2 HAVING count(*) <= {MAX_LSH_BUCKET_SIZE}),
-      cand AS (
-        SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-        FROM hashes a
-        JOIN ok ON ok.band_id = a.band_id AND ok.band_val = a.band_val
-        JOIN hashes b ON a.band_id = b.band_id
-             AND a.band_val = b.band_val AND a.doc_id < b.doc_id)
-      SELECT c.a_id, c.b_id, CAST({xors} AS BIGINT) AS hamming
-      FROM cand c
-      JOIN wide wa ON wa.doc_id = c.a_id
-      JOIN wide wb ON wb.doc_id = c.b_id
-      WHERE {xors} <= {PHASH_HAMMING_MAX}
-    """
-
-
 # ================================================================ registry
 
 # URL canonicalization + dedup: the first screen a Common-Crawl-style
@@ -6752,7 +4341,7 @@ def check_expectations(df: "DataFrame", specs: list) -> "DataFrame":
 # BEFORE a page's bytes enter the pipeline: robots.txt allow/deny
 # (politeness/legal), sitemap URL discovery (the publisher-declared
 # frontier feed), and magic-byte content sniffing (route HTML to the
-# text pipeline, media to the mm_* codec tier, archives to quarantine —
+# text pipeline, everything else (images, archives) to quarantine —
 # servers lie in Content-Type headers, so production sniffs payload
 # bytes). All inputs are planted in-query from the documents table (the
 # url_canon_dedup idiom) so both engines derive identical fixtures.
@@ -7093,8 +4682,8 @@ def crawl_mime_sniff(spark: SparkSession, sf: str) -> DataFrame:
     binary prefix with substring (binary in, binary out), classify on
     hex() of the slice — exactly what runs over a real (url, content
     binary) crawl table. The oracle certifies the same classification
-    from the hex plane (the mm_decode certificate idiom: engines agree
-    on the DECISION, each deriving it from its own byte handling).
+    from the hex plane: the engines agree on the DECISION, each deriving
+    it from its own byte handling.
 
     Scale shape: pure per-row codegen over the payload's first 8 bytes —
     no shuffle, no Python, independent of payload size (substring of a
@@ -7816,7 +5405,7 @@ def txt_pack_sequences_sql() -> str:
 # ln(3) already differs), so NO runtime log is evaluated in either engine.
 # Instead ln(c) for c = 1..LN_TABLE_MAX is quantized ONCE in Python to
 # integer nanonats (round(ln(c)*1e9)) and embedded as the SAME literal
-# array in both plans (the JPEG integer-IDCT discipline) — the entropy
+# array in both plans — the entropy
 #   n*H*1e9  =  n*lnq(n) - SUM_tok c*lnq(c)
 # is then exact bigint end to end: no float, no division, no ulps.
 # LN_TABLE_MAX = 128 covers the corpus (max 100 tokens/doc at every sf);
@@ -8451,13 +6040,10 @@ def datapipe_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "crawl_etld1": crawl_etld1,
         "crawl_redirects": crawl_redirects,
         "crawl_schedule": crawl_schedule,
-        "mm_video_frames": mm_video_frames,
-        "mm_vfp_pairs": mm_vfp_pairs,
         "dedup_minhash_lsh": dedup_minhash_lsh,
         "dedup_minhash_pairs": dedup_minhash_pairs,
         "dedup_minhash_quality": dedup_minhash_quality,
         "dedup_cluster": dedup_cluster,
-        "mm_decode_jpeg": mm_decode_jpeg,
         "ann_pq_codes": ann_pq_codes,
         "ann_pq_topk": ann_pq_topk,
         "ann_ivfpq_topk": ann_ivfpq_topk,
@@ -8507,14 +6093,6 @@ def datapipe_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "txt_boilerplate": txt_boilerplate,
         "txt_chunk": txt_chunk,
         "txt_pack_sequences": txt_pack_sequences,
-        "mm_downsample": mm_downsample,
-        "mm_decode_stub": mm_decode_stub,
-        "mm_decode": mm_decode,
-        "mm_decode_png": mm_decode_png,
-        "mm_decode_gif": mm_decode_gif,
-        "mm_audio_energy": mm_audio_energy,
-        "mm_phash_pairs": mm_phash_pairs,
-        "mm_afp_pairs": mm_afp_pairs,
         "grp_apply_pandas": grp_apply_pandas,
     }
 
@@ -8532,13 +6110,10 @@ def datapipe_oracle_sql() -> dict[str, str]:
         "crawl_etld1": crawl_etld1_sql(),
         "crawl_redirects": crawl_redirects_sql(),
         "crawl_schedule": crawl_schedule_sql(),
-        "mm_video_frames": mm_video_frames_sql(),
-        "mm_vfp_pairs": mm_vfp_pairs_sql(),
         "dedup_minhash_lsh": dedup_minhash_lsh_sql(),
         "dedup_minhash_pairs": dedup_minhash_pairs_sql(),
         "dedup_minhash_quality": dedup_minhash_quality_sql(),
         "dedup_cluster": dedup_cluster_sql(),
-        "mm_decode_jpeg": mm_decode_jpeg_sql(),
         "ann_pq_codes": ann_pq_codes_sql(),
         "ann_pq_topk": ann_pq_topk_sql(),
         "ann_ivfpq_topk": ann_ivfpq_topk_sql(),
@@ -8588,13 +6163,5 @@ def datapipe_oracle_sql() -> dict[str, str]:
         "txt_boilerplate": txt_boilerplate_sql(),
         "txt_chunk": txt_chunk_sql(),
         "txt_pack_sequences": txt_pack_sequences_sql(),
-        "mm_downsample": mm_downsample_sql(),
-        "mm_decode_stub": mm_decode_stub_sql(),
-        "mm_decode": mm_decode_sql(),
-        "mm_decode_png": mm_decode_png_sql(),
-        "mm_decode_gif": mm_decode_gif_sql(),
-        "mm_audio_energy": mm_audio_energy_sql(),
-        "mm_phash_pairs": mm_phash_pairs_sql(),
-        "mm_afp_pairs": mm_afp_pairs_sql(),
         "grp_apply_pandas": grp_apply_pandas_sql(),
     }

@@ -2298,7 +2298,7 @@ def _bfs_chain_sql(prefix: str, seed_cte: str,
 def graph_walk_pairs_sql() -> str:
     # reuse the walk chain verbatim, then split each path and pair
     # positions through a constant index table (DuckDB unnest has no
-    # ordinality here; the mm_decode_gif constant-index trick)
+    # ordinality here)
     walk_core = graph_walk_sql()
     body = walk_core[walk_core.index("WITH") + 4:]
     body = body[: body.rindex("SELECT walk_id")].rstrip() + ","

@@ -63,16 +63,27 @@ def iri(kind: str, key: Column) -> Column:
     return F.concat(F.lit(f"<{BASE_E}{kind}:"), key.cast("string"), F.lit(">"))
 
 
+# String-literal escapes in application order: backslash first (or the
+# escape backslashes get re-escaped), then quote, newline/CR/tab, then every
+# other C0 control as \uXXXX — valid in N-Triples, Turtle and JSON alike.
+_LIT_ESCAPES = [
+    ("\\", "\\\\"), ('"', '\\"'), ("\n", "\\n"), ("\r", "\\r"), ("\t", "\\t"),
+] + [(chr(cp), f"\\u{cp:04X}") for cp in range(0x20) if chr(cp) not in "\n\r\t"]
+
+
 def escape_literal(col: Column) -> Column:
-    """N-Triples string-literal escaping (backslash first, then quote —
-    order matters or the escape backslashes get re-escaped). Newline/CR/tab
-    follow the same replace chain. All JVM built-ins: stays inside
-    whole-stage codegen."""
-    c = F.replace(col, F.lit("\\"), F.lit("\\\\"))
-    c = F.replace(c, F.lit('"'), F.lit('\\"'))
-    c = F.replace(c, F.lit("\n"), F.lit("\\n"))
-    c = F.replace(c, F.lit("\r"), F.lit("\\r"))
-    return F.replace(c, F.lit("\t"), F.lit("\\t"))
+    """N-Triples / JSON string-literal escaping as one replace chain over
+    _LIT_ESCAPES. All JVM built-ins: stays inside whole-stage codegen."""
+    for ch, rep in _LIT_ESCAPES:
+        col = F.replace(col, F.lit(ch), F.lit(rep))
+    return col
+
+
+def _sql_escape_literal(expr: str) -> str:
+    """DuckDB mirror of escape_literal: the same replace chain, same order."""
+    for ch, rep in _LIT_ESCAPES:
+        expr = f"replace({expr}, chr({ord(ch)}), '{rep}')"
+    return expr
 
 
 def to_ntriples(
@@ -400,12 +411,7 @@ def kg_ntriples(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def kg_ntriples_sql() -> str:
-    # DuckDB replace() chain mirrors escape_literal exactly (order included)
-    esc = (
-        "replace(replace(replace(replace(replace(obj,"
-        " '\\', '\\\\'), '\"', '\\\"'), chr(10), '\\n'),"
-        " chr(13), '\\r'), chr(9), '\\t')"
-    )
+    esc = _sql_escape_literal("obj")
     return f"""
       WITH t AS (
         SELECT '<{BASE_E}cust:' || CAST(c_custkey AS VARCHAR) || '>' AS subj,
@@ -963,11 +969,7 @@ def kg_turtle(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def kg_turtle_sql() -> str:
-    esc = (
-        "replace(replace(replace(replace(replace(obj,"
-        " '\\', '\\\\'), '\"', '\\\"'), chr(10), '\\n'),"
-        " chr(13), '\\r'), chr(9), '\\t')"
-    )
+    esc = _sql_escape_literal("obj")
     return f"""
       WITH t AS (
         SELECT '<{BASE_E}cust:' || CAST(c_custkey AS VARCHAR) || '>' AS subj,
@@ -1011,10 +1013,10 @@ def to_jsonld(
     """Compacted JSON-LD serialization — the third RDF surface beside
     N-Triples/N-Quads lines and Turtle blocks: one JSON node object per
     subject, `{"@id": s, p1: [o1, o2], p2: [...]}`, IRIs as `{"@id":...}`
-    objects and literals as plain JSON strings (valid compact form). The
-    escape chain for JSON string content over this corpus is exactly the
-    N-Triples one (backslash-first, then quote/newline/CR/tab), so
-    escape_literal is reused — one discipline, three surfaces.
+    objects and literals as plain JSON strings (valid compact form).
+    escape_literal's output (backslash, quote, \\n \\r \\t, every other C0
+    control as \\uXXXX) is valid JSON string content, so it is reused —
+    one discipline, three surfaces.
 
     PRECONDITION: subject/predicate/IRI-object strings are emitted into
     JSON verbatim, so they must already be JSON-clean — i.e. IRIs in a
@@ -1102,11 +1104,7 @@ def kg_jsonld(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def kg_jsonld_sql() -> str:
-    esc = (
-        "replace(replace(replace(replace(replace(obj,"
-        " '\\', '\\\\'), '\"', '\\\"'), chr(10), '\\n'),"
-        " chr(13), '\\r'), chr(9), '\\t')"
-    )
+    esc = _sql_escape_literal("obj")
     return f"""
       WITH t AS (
         SELECT '{BASE_E}cust:' || CAST(c_custkey AS VARCHAR) AS subj,
@@ -1176,9 +1174,11 @@ def kg_literal_norm(spark: SparkSession, sf: str) -> DataFrame:
         F.array(*[F.lit(u) for u in _UNITS]),
         (F.col("l_partkey") % 4 + 1).cast("int"),
     )
+    # floor, not cast: a long cast truncates while DuckDB's BIGINT cast
+    # rounds, so a fractional quantity would split the engines
     raw_core = F.format_string(
         "%d.%02d %s",
-        F.col("l_quantity").cast("long"),
+        F.floor("l_quantity"),
         F.col("l_partkey") % 100,
         unit,
     )
@@ -1224,7 +1224,7 @@ def kg_literal_norm_sql() -> str:
                CASE WHEN (l_orderkey * 8 + l_linenumber) % 37 = 0
                     THEN 'approx ' ELSE '' END ||
                printf('%d.%02d %s',
-                      CAST(l_quantity AS BIGINT),
+                      CAST(floor(l_quantity) AS BIGINT),
                       l_partkey % 100,
                       [{units}][CAST(l_partkey % 4 AS INT) + 1]) AS raw
         FROM lineitem),

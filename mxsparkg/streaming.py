@@ -338,110 +338,6 @@ def streaming_click_attribution(
     )
 
 
-def start_media_dedup_stream(
-    media_stream: DataFrame,
-    index_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    fingerprint=None,
-    max_hamming: int | None = None,
-) -> StreamingQuery:
-    """Streaming NEAR-dup screen for a continuous media feed — the
-    multimodal twin of streaming_content_dedup. Exact digests can't
-    catch a re-encoded thumbnail or a phase-inverted clip, so each
-    micro-batch is fingerprinted in-partition (dHash for images,
-    energy-delta for audio — any (doc_id, b0..b3) band fingerprint fn)
-    and screened with the SAME banded Hamming join the batch tiers use,
-    in three layers:
-
-    - vs the INDEX (everything already ingested): banded candidate join
-      against the index's long-form band rows, Hamming ≤ max_hamming
-      drops the doc. The index is a plain parquet directory, so the
-      already-ingested side can be arbitrarily large — per micro-batch
-      this is a batch hash join, zero streaming state (the
-      streaming_content_dedup argument);
-    - WITHIN the batch: the banded pair join over the batch's own
-      fingerprints; the greedy keep-lowest-id side of each pair
-      survives (the dedup_cluster decision layer is the batch refiner);
-    - survivors' fingerprints are APPENDED to the index, so later
-      micro-batches near-dup against earlier survivors — the cross-batch
-      NEAR-dup case a pure stream-static join cannot express (its static
-      side is frozen at query start).
-
-    foreachBatch gives each micro-batch full batch semantics (the
-    start_detect_stream pattern), at-least-once append on retry like
-    every foreachBatch sink here; exactly-once needs batch_id-keyed
-    output partitions, the documented production hardening. Emits the
-    surviving (doc_id, b0..b3) manifest to out_dir."""
-    from pyspark.sql import functions as F
-
-    from mxsparkg.datapipe import (
-        PHASH_BANDS,
-        PHASH_HAMMING_MAX,
-        afp_media,
-        phash_candidate_pairs,
-    )
-
-    fp_fn = fingerprint or afp_media
-    maxh = PHASH_HAMMING_MAX if max_hamming is None else max_hamming
-
-    def _bands_long(fp: DataFrame) -> DataFrame:
-        return fp.select(
-            "doc_id", "b0", "b1", "b2", "b3",
-            F.posexplode(
-                F.array(*[F.col(f"b{i}") for i in range(PHASH_BANDS)])
-            ).alias("band_id", "band_val"),
-        )
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.errors import AnalysisException
-
-        spark = batch_df.sparkSession
-        fp = fp_fn(batch_df)
-        try:
-            idx = spark.read.parquet(index_dir)
-        except AnalysisException:  # first batch: index path not created yet
-            idx = None
-        # any other failure propagates: a transient index-read error must
-        # fail (and retry) the batch, not silently skip the cross-batch
-        # screen (a re-delivered doc is already idempotent here — it
-        # Hamming-0 matches its own indexed fingerprint and drops)
-        if idx is not None:
-            ham = sum(
-                F.bit_count(F.col(f"f.b{i}").bitwiseXOR(F.col(f"x.b{i}")))
-                for i in range(PHASH_BANDS)
-            )
-            dropped = (
-                _bands_long(fp).alias("f")
-                .join(
-                    idx.alias("x"),
-                    (F.col("f.band_id") == F.col("x.band_id"))
-                    & (F.col("f.band_val") == F.col("x.band_val")),
-                )
-                .filter(ham <= maxh)
-                .select(F.col("f.doc_id").alias("doc_id"))
-                .distinct()
-            )
-            fp = fp.join(dropped, "doc_id", "left_anti")
-        in_batch = phash_candidate_pairs(fp, max_hamming=maxh)
-        fp = fp.join(
-            in_batch.select(F.col("b_id").alias("doc_id")).distinct(),
-            "doc_id",
-            "left_anti",
-        )
-        # one action materializes survivors; the index append reuses it
-        fp = fp.localCheckpoint(eager=True)
-        fp.write.mode("append").parquet(out_dir)
-        _bands_long(fp).write.mode("append").parquet(index_dir)
-
-    return (
-        media_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def start_geo_match_stream(
     point_stream: DataFrame,
     index_dir: str,
@@ -454,7 +350,7 @@ def start_geo_match_stream(
     point feed (pid, lat_e6, lon_e6): every incoming point is matched
     against ALL points ever ingested, within radius r_e6, via the same
     grid-probe join the batch geo tier uses (mxsparkg/geo.py). Three
-    layers per micro-batch, the start_media_dedup_stream shape:
+    layers per micro-batch:
 
     - vs the INDEX: the new batch's 3x3 cell probes equi-join the
       index's (pid, coords, cell) parquet — a plain batch hash join per

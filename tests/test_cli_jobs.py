@@ -100,52 +100,6 @@ def test_datapipe_ops(cli):
             assert res["rows"] == rows * 5  # 500 docs at sf0.001
 
 
-def test_datapipe_media_pair_ops(cli, spark):
-    """phash_pairs / afp_pairs over a real (doc_id, media) parquet: one
-    planted near-dup each (brightness-shifted BMP, phase-inverted WAV),
-    one distinct item — exactly one pair out of each op."""
-    from mxsparkg.datapipe import (
-        AFP_N_SAMPLES,
-        PHASH_BASE_H,
-        PHASH_BASE_W,
-        _afp_sample,
-        _encode_bmp_gray,
-        _encode_wav_pcm,
-        _phash_gray,
-    )
-
-    W, H = PHASH_BASE_W, PHASH_BASE_H
-    img = [_phash_gray(3, p) for p in range(W * H)]
-    img2 = [_phash_gray(4, p) for p in range(W * H)]
-    bmp_path = f"{ROOT}/media_bmp"
-    spark.createDataFrame(
-        [(1, _encode_bmp_gray(W, H, img)),
-         (2, _encode_bmp_gray(W, H, [v + 10 for v in img])),
-         (3, _encode_bmp_gray(W, H, img2))],
-        "doc_id long, media binary",
-    ).write.mode("overwrite").parquet(bmp_path)
-    res = cli("datapipe", [
-        "--op", "phash_pairs", "--input", bmp_path,
-        "--out", f"{ROOT}/dp_phash_pairs",
-    ])
-    assert res["rows"] == 1
-
-    pcm = [_afp_sample(3, i) for i in range(AFP_N_SAMPLES)]
-    pcm2 = [_afp_sample(4, i) for i in range(AFP_N_SAMPLES)]
-    wav_path = f"{ROOT}/media_wav"
-    spark.createDataFrame(
-        [(1, _encode_wav_pcm(8000, pcm)),
-         (2, _encode_wav_pcm(8000, [-x for x in pcm])),
-         (3, _encode_wav_pcm(8000, pcm2))],
-        "doc_id long, media binary",
-    ).write.mode("overwrite").parquet(wav_path)
-    res = cli("datapipe", [
-        "--op", "afp_pairs", "--input", wav_path,
-        "--out", f"{ROOT}/dp_afp_pairs",
-    ])
-    assert res["rows"] == 1
-
-
 def test_graph_analytics_ops(cli, spark):
     edges = spark.createDataFrame(
         [("a", "r", "b", 2), ("b", "r", "c", 1), ("a", "r", "c", 1),

@@ -10,12 +10,22 @@ Marked slow (it is the longest test in the suite); run it alone with
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+
 import pytest
 
 import __spark_entry__ as entrymod
 from mxsparkg.gate import compare_key, duckdb_conn
 
 SF = "/root/testdata/sf0.01"
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# The registered key set, pinned: a key that disappears (a deleted op, a
+# registry module that stops importing) must show up here as a deliberate
+# count change, never as a gate that silently checks less.
+N_REGISTERED_KEYS = 219
 
 # Keys that legitimately have no SQL oracle (approx sketches, fixture-backed
 # scans). Anything NOT in this list must carry an oracle_sql() entry — a new
@@ -26,6 +36,20 @@ EXPECTED_ROWS_ONLY = {
     "agg_approx_percentile",  # GK summary vs t-digest not value-comparable;
     # error bound vs exact pinned by test_contract_gate's bound test below
 }
+
+
+def test_registered_keys_pinned_and_cover_correctness_panels():
+    """Every key any past correctness panel (CORRECTNESS_r0*.json)
+    checked is still registered, and the registry has exactly the pinned
+    size. Import-only: no Spark job runs."""
+    panel: set[str] = set()
+    for path in glob.glob(os.path.join(ROOT, "CORRECTNESS_r0*.json")):
+        with open(path) as f:
+            panel |= set(json.load(f))
+    assert panel, "no CORRECTNESS_r0*.json panels found"
+    qs = entrymod.queries()
+    assert panel <= set(qs), sorted(panel - set(qs))
+    assert len(qs) == N_REGISTERED_KEYS
 
 
 @pytest.mark.slow

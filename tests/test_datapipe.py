@@ -14,7 +14,6 @@ from mxsparkg.datapipe import (
     dedup_exact,
     minhash_candidate_pairs,
     minhash_signatures,
-    mm_decode_stub,
     txt_langid,
 )
 
@@ -166,100 +165,6 @@ def test_simhash_width_64(spark, planted):
     assert all(h64[d][:16] == h16[d] for d in h16)
     assert h64[2] == h64[3]                      # exact dups
     assert any(h64[0] != h64[i] for i in range(4, 12))
-
-
-def test_mm_codec_roundtrip_pure():
-    """The BMP/WAV codecs are real: encode with spec headers, parse back
-    with struct.unpack only. Odd widths exercise the 4-byte row padding."""
-    from mxsparkg.datapipe import _encode_bmp, _encode_wav, _parse_media
-
-    for w, h in [(1, 1), (5, 3), (32, 17), (6, 4)]:
-        blob = _encode_bmp(w, h, seed=7)
-        meta = _parse_media(blob)
-        assert meta["media_type"] == "image"
-        assert (meta["width"], meta["height"]) == (w, h)
-        assert meta["n_bytes"] == len(blob) == 54 + ((w * 3 + 3) // 4 * 4) * h
-        assert meta["bit_depth"] == 24
-    for rate, n in [(8000, 1), (16000, 137), (12000, 50)]:
-        blob = _encode_wav(rate, n, seed=3)
-        meta = _parse_media(blob)
-        assert meta["media_type"] == "audio"
-        assert meta["sample_rate"] == rate
-        assert meta["n_samples"] == n
-        assert meta["n_bytes"] == len(blob) == 44 + n * 2
-        assert meta["bit_depth"] == 16
-
-
-def test_mm_decode_real_fields(spark):
-    """End-to-end mapInPandas decode: parsed header fields equal the
-    generation arithmetic for every doc (the Spark side of the oracle)."""
-    from mxsparkg.datapipe import mm_decode
-
-    rows = mm_decode(spark, SF).collect()
-    assert len(rows) == 500
-    for r in rows:
-        if r.doc_id % 2 == 0:
-            w, h = 4 + r.doc_id % 29, 3 + r.doc_id % 17
-            assert (r.media_type, r.width, r.height) == ("image", w, h)
-            assert r.n_bytes == 54 + ((w * 3 + 3) // 4 * 4) * h
-        else:
-            assert r.media_type == "audio"
-            assert r.sample_rate == 8000 + (r.doc_id % 3) * 4000
-            assert r.n_samples == 50 + r.doc_id % 100
-
-
-def test_mm_decode_stub_schema_and_determinism(spark):
-    rows = mm_decode_stub(spark, SF).collect()
-    assert len(rows) == 500
-    for r in rows[:20]:
-        assert r.media_type == {0: "image", 1: "audio", 2: "video"}[r.doc_id % 3]
-        assert r.width == 160 + (r.n_bytes % 8) * 80
-        assert (r.n_frames == 1) == (r.media_type != "video") or r.n_bytes % 24 == 0
-
-
-def test_png_codec_roundtrip_and_integrity():
-    """Pure-python PNG codec: spec round-trip, CRC verification, and the
-    decompressed-size check all bind (a corrupt stream must not decode)."""
-    import pytest
-
-    from mxsparkg.datapipe import _encode_png, _parse_png
-
-    blob = _encode_png(7, 5, seed=42)
-    meta = _parse_png(blob)
-    assert meta == {
-        "media_type": "image", "width": 7, "height": 5,
-        "bit_depth": 8, "color_type": 0, "n_pixels": 35,
-    }
-    # flip one pixel byte inside IDAT → chunk CRC must catch it
-    corrupt = bytearray(blob)
-    corrupt[len(blob) // 2] ^= 0xFF
-    with pytest.raises(Exception):
-        _parse_png(bytes(corrupt))
-    # non-PNG bytes rejected
-    with pytest.raises(ValueError):
-        _parse_png(b"BM" + b"\x00" * 50)
-
-
-def test_decode_media_reads_binary_column_from_parquet(spark, tiny_fixtures):
-    """The multimodal decoder consumes a REAL stored binary column: read
-    fixtures' media.parquet (BMP/WAV/PNG blobs) and check every parsed
-    field against the generator's arithmetic."""
-    from mxsparkg.datapipe import decode_media
-
-    media = spark.read.parquet(f"{tiny_fixtures}/media.parquet")
-    assert dict(media.dtypes)["media"] == "binary"
-    rows = {int(r.doc_id): r for r in decode_media(media).collect()}
-    assert len(rows) == 200
-    for i, r in rows.items():
-        if i % 3 == 0:      # BMP
-            assert (r.media_type, r.width, r.height, r.bit_depth) == (
-                "image", 4 + i % 29, 3 + i % 17, 24)
-        elif i % 3 == 1:    # PCM WAV
-            assert (r.media_type, r.sample_rate, r.n_samples, r.bit_depth) == (
-                "audio", 8000 + (i % 3) * 4000, 50 + i % 100, 16)
-        else:               # compressed PNG
-            assert (r.media_type, r.width, r.height, r.bit_depth) == (
-                "image", 4 + i % 13, 3 + i % 11, 8)
 
 
 def test_kmeans_parameterized_invariance_and_kmeanspp(spark):
@@ -742,53 +647,6 @@ def test_evt_asof_tie_null_and_latest_semantics(spark, tmp_path):
     assert got[5] == (None, None, None)       # no prior view -> NULLs
 
 
-def test_jpeg_codec_roundtrip_pixels_and_integrity():
-    """Baseline-JPEG entropy layer: planted quantized coefficients survive
-    encode→decode exactly for a spread of doc patterns (incl. the ZRL
-    >=16-zero-run and EOB-only branches); DC-only constant blocks decode
-    to EXACT pixel values through dequant + IDCT (the integer-exact case);
-    malformed streams fail loudly."""
-    import numpy as np
-    import pytest as pt
-
-    from mxsparkg.datapipe import (
-        _decode_jpeg_pixels,
-        _encode_jpeg,
-        _jpeg_blocks_for_doc,
-        _parse_jpeg,
-    )
-
-    for d in [0, 1, 7, 13, 31, 49, 123, 457]:
-        w, h = 8 * (1 + d % 4), 8 * (1 + d % 3)
-        blocks = _jpeg_blocks_for_doc(d, (w // 8) * (h // 8))
-        m = _parse_jpeg(_encode_jpeg(w, h, blocks))
-        assert (m["width"], m["height"]) == (w, h)
-        got = [{z: v for z, v in b.items() if v} for b in m["blocks"]]
-        want = [{z: v for z, v in b.items() if v} for b in blocks]
-        assert got == want
-    # at least one planted block must hit the ZRL path (zigzag 30 with a
-    # >=16-zero run before it) or the branch is untested
-    assert any(
-        30 in b and max(z for z in b if 0 < z < 30) < 14 if any(
-            0 < z < 30 for z in b) else 30 in b
-        for d in (0, 1, 7, 13)
-        for b in _jpeg_blocks_for_doc(d, 12)
-    )
-    # DC-only: constant blocks, IDCT is exactly integer
-    consts = [128 + 2 * k for k in range(-6, 0)]
-    blocks = [{0: (c - 128) * 8 // 16} for c in consts]
-    px = _decode_jpeg_pixels(_encode_jpeg(24, 16, blocks))
-    assert px.shape == (16, 24) and px.dtype == np.uint8
-    for bi, c in enumerate(consts):
-        by, bx = divmod(bi, 3)
-        assert (px[by * 8:(by + 1) * 8, bx * 8:(bx + 1) * 8] == c).all()
-    blob = _encode_jpeg(8, 8, [{0: 5}])
-    with pt.raises(ValueError):
-        _parse_jpeg(b"\x00\x01" + blob[2:])       # bad SOI
-    with pt.raises(ValueError):
-        _parse_jpeg(blob[:-2] + b"\xff\xd8")      # scan not EOI-terminated
-
-
 def test_pq_train_reduces_error_and_codes_are_invariant(spark):
     """PQ semantics the oracle can't check: Lloyd-trained codebooks must
     quantize the real embedding table with LOWER mean squared error than
@@ -1077,61 +935,6 @@ def test_filter_gate_every_rule_fires_and_mask_consistent(spark):
         assert ((r.reasons & 16) > 0) == (logit[r.doc_id] <= FILTER_MIN_LOGIT)
 
 
-def test_gif_lzw_roundtrip_including_table_reset():
-    """GIF variable-width LZW: round-trips at every size class including
-    a 60k-pixel stream that overflows the 2^12 code table (forcing the
-    mid-stream clear + reset path), and the block-level parse returns
-    the decoded pixel count and the position-weighted checksum."""
-    import random
-
-    from mxsparkg.datapipe import (
-        _encode_gif, _gif_pixels, _lzw_decode, _lzw_encode, _parse_gif,
-    )
-
-    for n in (1, 7, 200, 5000, 60000):
-        random.seed(n)
-        px = [random.randrange(4) for _ in range(n)]
-        assert _lzw_decode(_lzw_encode(px)) == px
-    for w, h, s in [(4, 3, 0), (14, 9, 7), (9, 5, 123)]:
-        m = _parse_gif(_encode_gif(w, h, s))
-        assert (m["width"], m["height"], m["n_pixels"]) == (w, h, w * h)
-        want = sum(
-            p * (i + 1) for i, p in enumerate(_gif_pixels(w, h, s))
-        )
-        assert m["px_checksum"] == want
-
-
-def test_parse_media_sniffs_gif():
-    """decode_media's magic-byte dispatch recognizes GIF89a and reports
-    the palette bit depth (4 colors -> 2 bits)."""
-    from mxsparkg.datapipe import _encode_gif, _parse_media
-
-    m = _parse_media(_encode_gif(9, 5, seed=3))
-    assert (m["media_type"], m["width"], m["height"], m["bit_depth"]) == (
-        "image", 9, 5, 2)
-
-
-def test_wav_samples_and_window_features_hand_case():
-    """_wav_samples really decodes 16-bit LE PCM (checked against
-    struct-level expectations for a known seed), and the window features
-    match a direct recomputation."""
-    import struct
-
-    from mxsparkg.datapipe import AUDIO_WIN, _encode_wav, _wav_samples
-
-    blob = _encode_wav(8000, 50, seed=3)
-    s = _wav_samples(blob)
-    assert len(s) == 50
-    # sample 0 by hand: bytes (21, 22) -> unsigned 21 + 256*22 = 5653
-    assert s[0] == struct.unpack("<h", bytes([21, 22]))[0] == 5653
-    # windows: exact integer energy and sign-flip count
-    for w0 in range(0, 50, AUDIO_WIN):
-        win = s[w0 : w0 + AUDIO_WIN]
-        assert sum(x * x for x in win) >= 0
-        flips = sum(1 for a, b in zip(win, win[1:]) if (a >= 0) != (b >= 0))
-        assert 0 <= flips <= len(win) - 1
-
-
 def test_classify_trained_beats_hash_standin(spark, sf001):
     """The trained classifier (fixed-point full-batch GD over hashed
     binary features) must actually LEARN: held-out accuracy lands at the
@@ -1198,158 +1001,3 @@ def test_classify_train_error_curve_decreases(spark, sf001):
     e1, e8 = train_err(w1), train_err(w8)
     assert e8 < e1 < 1.0
     assert e8 <= 0.10, (e1, e8)
-
-
-def test_phash_invariance_and_perturbed_copy_recovered(spark):
-    """Semantics the oracle can't check: dHash really is invariant to the
-    transforms it claims (brightness shift, integer resample), a copy with
-    a few perturbed pixels lands at small-but-nonzero Hamming and is still
-    paired, and a genuinely different image is NOT paired."""
-    from mxsparkg.datapipe import (
-        PHASH_BASE_H,
-        PHASH_BASE_W,
-        PHASH_HAMMING_MAX,
-        _encode_bmp_gray,
-        _phash_gray,
-        phash_candidate_pairs,
-        phash_media,
-    )
-
-    W, H = PHASH_BASE_W, PHASH_BASE_H
-    base = [_phash_gray(7, p) for p in range(W * H)]
-    bright = [v + 24 for v in base]
-    up = [base[(y // 2) * W + (x // 2)]
-          for y in range(2 * H) for x in range(2 * W)]
-    # perturb exactly one grid cell (0,0), in the direction that provably
-    # flips bit(0,0): cell (0,0) only feeds that one comparison, so the
-    # copy lands at Hamming exactly 1
-    cs00 = sum(base[y * W + x] for y in range(2) for x in range(2))
-    cs01 = sum(base[y * W + x] for y in range(2) for x in range(2, 4))
-    forced = 250 if cs00 < cs01 else 0
-    noisy = list(base)
-    for y in range(2):
-        for x in range(2):
-            noisy[y * W + x] = forced
-    other = [_phash_gray(8, p) for p in range(W * H)]
-    media = spark.createDataFrame(
-        [
-            (1, _encode_bmp_gray(W, H, base)),
-            (2, _encode_bmp_gray(W, H, bright)),
-            (3, _encode_bmp_gray(2 * W, 2 * H, up)),
-            (4, _encode_bmp_gray(W, H, noisy)),
-            (5, _encode_bmp_gray(W, H, other)),
-        ],
-        "doc_id long, media binary",
-    )
-    hashes = {
-        r["doc_id"]: (r["b0"], r["b1"], r["b2"], r["b3"])
-        for r in phash_media(media).collect()
-    }
-    assert hashes[1] == hashes[2] == hashes[3]  # provable invariances
-    ham_noisy = sum(
-        bin(a ^ b).count("1") for a, b in zip(hashes[1], hashes[4])
-    )
-    assert 0 < ham_noisy <= PHASH_HAMMING_MAX
-    ham_other = sum(
-        bin(a ^ b).count("1") for a, b in zip(hashes[1], hashes[5])
-    )
-    assert ham_other > PHASH_HAMMING_MAX
-    pairs = {
-        (r["a_id"], r["b_id"])
-        for r in phash_candidate_pairs(phash_media(media)).collect()
-    }
-    assert {(1, 2), (1, 3), (2, 3), (1, 4)} <= pairs
-    assert not any(5 in p for p in pairs)
-
-
-def test_phash_parser_rejects_unnormalized_dims():
-    from mxsparkg.datapipe import _dhash_bands_from_bmp, _encode_bmp_gray
-
-    with pytest.raises(ValueError, match="divisible"):
-        _dhash_bands_from_bmp(_encode_bmp_gray(10, 16, [50] * 160))
-
-
-def test_jpeg_integer_idct_tracks_float_idct():
-    """The fixed-point IDCT that backs the px_sum/px_check gate columns
-    must agree with the orthonormal float IDCT within ±1 gray level on
-    AC-rich planted blocks (the libjpeg-islow accuracy posture), and be
-    EXACT on DC-only constant blocks where the answer is integral."""
-    import numpy as np
-
-    from mxsparkg.datapipe import (
-        _decode_jpeg_pixels,
-        _decode_jpeg_pixels_int,
-        _encode_jpeg,
-        _jpeg_blocks_for_doc,
-    )
-
-    for d in [0, 1, 7, 13, 31, 49, 123, 457]:
-        w, h = 8 * (1 + d % 4), 8 * (1 + d % 3)
-        blob = _encode_jpeg(w, h, _jpeg_blocks_for_doc(d, (w // 8) * (h // 8)))
-        fx = _decode_jpeg_pixels(blob).astype(np.int64)
-        ix = _decode_jpeg_pixels_int(blob).astype(np.int64)
-        assert np.abs(fx - ix).max() <= 1, d
-    # DC-only constant blocks: integral IDCT, integer path must be exact
-    consts = [128 + 2 * k for k in range(-6, 0)]
-    blob = _encode_jpeg(24, 16, [{0: (c - 128) * 8 // 16} for c in consts])
-    px = _decode_jpeg_pixels_int(blob)
-    for bi, c in enumerate(consts):
-        by, bx = divmod(bi, 3)
-        assert (px[by * 8:(by + 1) * 8, bx * 8:(bx + 1) * 8] == c).all()
-
-
-def test_afp_invariance_and_perturbed_copy_recovered(spark):
-    """Audio-fingerprint semantics the oracle can't check: the energy-
-    delta fingerprint really is invariant to phase inversion and to a
-    container-layout change (the chunk-walking parser, not offset-44
-    luck); a copy with one corrupted window lands at small-but-nonzero
-    Hamming and is still paired; a different clip is NOT paired."""
-    from mxsparkg.datapipe import (
-        AFP_N_SAMPLES,
-        AFP_WIN,
-        PHASH_HAMMING_MAX,
-        _afp_sample,
-        _encode_wav_pcm,
-        _wav_samples,
-        afp_media,
-        phash_candidate_pairs,
-    )
-
-    base = [_afp_sample(7, i) for i in range(AFP_N_SAMPLES)]
-    inv = [-x for x in base]
-    # corrupt exactly window 5 (feeds delta bits 4 and 5): zero it out,
-    # so at most 2 bits flip — Hamming in (0, 2], still under threshold
-    noisy = list(base)
-    noisy[5 * AFP_WIN:6 * AFP_WIN] = [0] * AFP_WIN
-    other = [_afp_sample(8, i) for i in range(AFP_N_SAMPLES)]
-    media = spark.createDataFrame(
-        [
-            (1, _encode_wav_pcm(8000, base)),
-            (2, _encode_wav_pcm(8000, inv)),
-            (3, _encode_wav_pcm(8000, base, junk_chunk=True)),
-            (4, _encode_wav_pcm(8000, noisy)),
-            (5, _encode_wav_pcm(8000, other)),
-        ],
-        "doc_id long, media binary",
-    )
-    # the chunk walk decodes the SAME samples through the junk chunk
-    assert _wav_samples(_encode_wav_pcm(8000, base, junk_chunk=True)) == base
-    hashes = {
-        r["doc_id"]: (r["b0"], r["b1"], r["b2"], r["b3"])
-        for r in afp_media(media).collect()
-    }
-    assert hashes[1] == hashes[2] == hashes[3]  # provable invariances
-    ham_noisy = sum(
-        bin(a ^ b).count("1") for a, b in zip(hashes[1], hashes[4])
-    )
-    assert 0 < ham_noisy <= 2
-    ham_other = sum(
-        bin(a ^ b).count("1") for a, b in zip(hashes[1], hashes[5])
-    )
-    assert ham_other > PHASH_HAMMING_MAX
-    pairs = {
-        (r["a_id"], r["b_id"])
-        for r in phash_candidate_pairs(afp_media(media)).collect()
-    }
-    assert {(1, 2), (1, 3), (2, 3), (1, 4)} <= pairs
-    assert not any(5 in p for p in pairs)

@@ -37,6 +37,41 @@ def test_ntriples_escaping_and_shape(spark):
     )
 
 
+def test_jsonld_escapes_c0_controls(spark):
+    """A literal carrying C0 controls (U+0001, backspace, form feed, NUL,
+    U+001F) next to quote/backslash/newline still serializes to a doc
+    that json.loads accepts and reads back verbatim."""
+    import json
+
+    from mxsparkg.kgexport import to_jsonld
+
+    val = 'a\x01b\bc\fd"e\\f\ng\x00h\x1f'
+    df = spark.createDataFrame(
+        [("urn:kg:e:a", "urn:kg:p:label", val, True)],
+        "subj string, pred string, obj string, lit boolean",
+    )
+    (doc,) = [r.doc for r in to_jsonld(df, obj_is_literal="lit").collect()]
+    assert json.loads(doc) == {"@id": "urn:kg:e:a", "urn:kg:p:label": [val]}
+
+
+def test_literal_escape_matches_duckdb_mirror(spark):
+    """The oracle-side escape chain renders every C0 control, quote and
+    backslash exactly like the Spark one."""
+    import duckdb
+
+    from mxsparkg.kgexport import _sql_escape_literal, escape_literal
+
+    val = "".join(chr(c) for c in range(0x20)) + '"\\x'
+    (got,) = spark.createDataFrame([(val,)], "obj string").select(
+        escape_literal(F.col("obj"))).first()
+    (want,) = duckdb.connect().execute(
+        f"SELECT {_sql_escape_literal('obj')} FROM (SELECT ?::VARCHAR AS obj)",
+        [val],
+    ).fetchone()
+    assert got == want
+    assert all(ord(ch) >= 0x20 for ch in got)
+
+
 def test_ntriples_plan_has_no_shuffle_no_python(spark):
     df = spark.createDataFrame(
         [("<s>", "<p>", "<o>", False)], ["subj", "pred", "obj", "lit"]
@@ -372,6 +407,34 @@ def test_literal_norm_parses_and_rejects(spark, sf001):
             assert r.si_um == r.qty_milli * _UNIT_UM[r.unit], r
             seen_units.add(r.unit)
     assert seen_units == set(_UNIT_UM)
+
+
+def test_literal_norm_floors_fractional_quantity_in_both_engines(
+        spark, tmp_path):
+    """A fractional l_quantity renders as its floor in Spark AND in the
+    DuckDB oracle (a long cast truncates, a BIGINT cast rounds)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mxsparkg.gate import compare_key, duckdb_conn
+    from mxsparkg.kgexport import kg_literal_norm, kg_literal_norm_sql
+
+    sf = str(tmp_path)
+    pq.write_table(pa.table({
+        "l_orderkey": pa.array([1, 1, 2, 2], pa.int64()),
+        "l_partkey": pa.array([5, 6, 7, 8], pa.int64()),
+        "l_linenumber": pa.array([1, 2, 1, 2], pa.int32()),
+        "l_quantity": pa.array([3.7, 12.5, 0.6, 41.0], pa.float64()),
+    }), f"{sf}/lineitem.parquet")  # one file: DuckDB reads it as a table
+    got = compare_key(
+        spark, duckdb_conn(sf), {"k": kg_literal_norm},
+        {"k": kg_literal_norm_sql()}, "k", sf,
+    )
+    assert got["status"] == "pass", got["detail"]
+    wholes = sorted(
+        int(r.raw.split(".")[0]) for r in kg_literal_norm(spark, sf).collect()
+    )
+    assert wholes == [0, 3, 12, 41]
 
 
 def test_date_norm_round_trips_iso(spark, sf001):

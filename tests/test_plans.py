@@ -343,23 +343,6 @@ def test_newest_batch_no_interpreted_join_no_python(spark):
         assert "EvalPython" not in plan, name
 
 
-def test_phash_pair_join_is_hash_never_nested_loop(spark):
-    """mm_phash_pairs: the banded Hamming candidate join must plan as a
-    hash equi-join on (band_id, band_val) with the bucket cap as a
-    broadcast anti-join — never a nested-loop/cartesian (the O(n²) shape
-    the banding exists to avoid). The Hamming bit math stays JVM-side;
-    Python appears only in the two mapInPandas passes (encode + dHash),
-    never in the join stages."""
-    from mxsparkg.datapipe import mm_phash_pairs
-
-    plan = _plan(mm_phash_pairs(spark, "/root/testdata/sf0.001"))
-    assert "NestedLoop" not in plan, plan
-    assert "Cartesian" not in plan, plan
-    assert "BroadcastHashJoin" in plan, plan  # the anti-join cap
-    # join keys are the band columns, not a trivial/true condition
-    assert "band_val" in plan and "band_id" in plan
-
-
 def test_attribution_single_exchange_no_python(spark):
     """evt_attribution: both window frames (24h RANGE max + unbounded
     RANGE min) must share ONE user_id hash Exchange and one sort — the

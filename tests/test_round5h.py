@@ -239,145 +239,6 @@ def test_politeness_schedule_delays_and_order(spark):
     assert got["https://b/1"] == (0, 0)
 
 
-def test_avi_mjpeg_round_trip_and_lying_header(spark):
-    """Container layer alone: encode N JPEG frames into AVI, walk the
-    RIFF tree back out byte-identical (even-padding honored — odd-length
-    frames exercise it), and reject a header whose dwTotalFrames lies."""
-    import struct
-
-    from mxsparkg.datapipe import (
-        _encode_avi_mjpeg,
-        _encode_jpeg,
-        _jpeg_blocks_for_doc,
-        _parse_avi_mjpeg,
-    )
-
-    frames = [
-        _encode_jpeg(8, 8, _jpeg_blocks_for_doc(s, 1)) for s in (3, 11, 40)
-    ]
-    assert any(len(f) % 2 for f in frames), "want an odd-length frame"
-    blob = _encode_avi_mjpeg(8, 8, frames)
-    m = _parse_avi_mjpeg(blob)
-    assert m["n_frames_hdr"] == 3 and m["width"] == 8 and m["height"] == 8
-    assert m["frames"] == frames
-    # corrupt dwTotalFrames (avih field 4) in place -> hard error
-    i = blob.index(b"avih") + 8
-    bad = blob[:i + 16] + struct.pack("<I", 99) + blob[i + 20:]
-    try:
-        _parse_avi_mjpeg(bad)
-        raise AssertionError("lying header accepted")
-    except ValueError:
-        pass
-
-
-def test_video_frame_sampling_decodes_only_kth(spark, tmp_path):
-    """mm_video_frames keeps exactly the f % K == 0 frames of each doc's
-    4-8 frame video, and each sampled frame's stats match the planted
-    per-frame JPEG (seed A*doc + B*f) decoded directly."""
-    from mxsparkg.datapipe import (
-        VIDEO_SAMPLE_K,
-        VIDEO_SEED_A,
-        VIDEO_SEED_B,
-        _jpeg_blocks_for_doc,
-        mm_video_frames,
-    )
-
-    sf = _write_docs(spark, tmp_path, n=20)
-    rows = mm_video_frames(spark, sf).collect()
-    byframe = {(r.doc_id, r.frame_idx): r for r in rows}
-    for d in range(20):
-        n_frames = 4 + d % 5
-        want_idx = [f for f in range(n_frames) if f % VIDEO_SAMPLE_K == 0]
-        got_idx = sorted(f for (dd, f) in byframe if dd == d)
-        assert got_idx == want_idx, (d, got_idx)
-        for f in want_idx:
-            r = byframe[(d, f)]
-            assert r.n_frames == n_frames
-            blocks = _jpeg_blocks_for_doc(
-                VIDEO_SEED_A * d + VIDEO_SEED_B * f, (8 * (1 + d % 2)) // 8
-            )
-            assert r.dc_sum_q == sum(b.get(0, 0) for b in blocks)
-            assert r.ac_sum_q == sum(
-                v for b in blocks for z, v in b.items() if z > 0)
-
-
-def test_video_fingerprint_shift_invariant_pairs(spark, tmp_path):
-    """mm_vfp_pairs recovers exactly the planted near-dups: the
-    +DC-shift re-encode (different bytes, same temporal signature) and
-    the bit-identical re-mux both pair with their original; nothing
-    else pairs (the md5-widened coefficient plant leaves no chance
-    signature clashes at this scale)."""
-    from mxsparkg.datapipe import MINHASH_PLANT_OFFSET, mm_vfp_pairs
-
-    sf = _write_docs(spark, tmp_path, n=60)
-    pairs = {(r.a_id, r.b_id) for r in mm_vfp_pairs(spark, sf).collect()}
-    want = {(d, d + MINHASH_PLANT_OFFSET)
-            for d in range(60) if d % 6 in (2, 5)}
-    assert pairs == want
-
-
-def test_video_fingerprint_shift_actually_changes_bytes(spark):
-    """The %6==2 plant must be a REAL re-encode (different JPEG bytes),
-    or the shift-invariance claim is vacuous: encode the same frame with
-    and without the DC shift and check the streams differ while the AC
-    stats agree."""
-    from mxsparkg.datapipe import (
-        VFP_DC_SHIFT,
-        _encode_jpeg,
-        _jpeg_blocks_for_doc,
-        _parse_jpeg,
-    )
-
-    base_blocks = _jpeg_blocks_for_doc(12345, 2)
-    shifted = [dict(b) for b in base_blocks]
-    for b in shifted:
-        b[0] = b.get(0, 0) + VFP_DC_SHIFT
-    j0 = _encode_jpeg(16, 8, base_blocks)
-    j1 = _encode_jpeg(16, 8, shifted)
-    assert j0 != j1
-    m0, m1 = _parse_jpeg(j0), _parse_jpeg(j1)
-    ac0 = sorted((z, v) for blk in m0["blocks"]
-                 for z, v in blk.items() if z > 0)
-    ac1 = sorted((z, v) for blk in m1["blocks"]
-                 for z, v in blk.items() if z > 0)
-    assert ac0 == ac1
-    dc0 = [b.get(0, 0) for b in m0["blocks"]]
-    dc1 = [b.get(0, 0) for b in m1["blocks"]]
-    assert [d1 - d0 for d0, d1 in zip(dc0, dc1)] == [VFP_DC_SHIFT] * 2
-
-
-def test_avi_parser_hostile_input(spark):
-    """Truncation at ANY byte and pure garbage must raise a clean
-    ValueError — never a silent short frame (a truncated tail chunk
-    previously slipped through as a counted-but-short JPEG)."""
-    from mxsparkg.datapipe import (
-        _encode_avi_mjpeg,
-        _encode_jpeg,
-        _jpeg_blocks_for_doc,
-        _parse_avi_mjpeg,
-    )
-
-    blob = _encode_avi_mjpeg(
-        8, 8,
-        [_encode_jpeg(8, 8, _jpeg_blocks_for_doc(s, 1)) for s in (1, 2, 3)],
-    )
-    assert len(_parse_avi_mjpeg(blob)["frames"]) == 3
-    for cut in (0, 3, 11, 20, len(blob) // 2, len(blob) - 3,
-                len(blob) - 1):
-        try:
-            _parse_avi_mjpeg(blob[:cut])
-            raise AssertionError(f"truncation at {cut} accepted")
-        except ValueError:
-            pass
-    for junk in (b"", b"\x00" * 200, b"RIFF" + b"\xff" * 100,
-                 blob[4:], bytes(reversed(blob))):
-        try:
-            _parse_avi_mjpeg(junk)
-            raise AssertionError("garbage accepted")
-        except ValueError:
-            pass
-
-
 def test_qa_expectations_closed_form(spark, tmp_path):
     """Synthesized orders with keys 0..199: each planted residue class
     yields an exactly countable violation set (classes overlap on

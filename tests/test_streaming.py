@@ -387,70 +387,6 @@ def test_streaming_content_dedup_matches_batch_incremental(spark):
     assert got == batch_keep
 
 
-def test_streaming_media_dedup_near_dups_across_batches(spark):
-    """start_media_dedup_stream drops a within-batch near-dup (brightness
-    shift), a CROSS-micro-batch near-dup (2x resample of a batch-1
-    survivor, caught via the index append — the case stream-static joins
-    can't express), keeps distinct images, and matches the batch
-    keep-set."""
-    from mxsparkg.datapipe import (
-        PHASH_BASE_H,
-        PHASH_BASE_W,
-        _encode_bmp_gray,
-        _phash_gray,
-        phash_candidate_pairs,
-        phash_media,
-    )
-    from mxsparkg.streaming import start_media_dedup_stream
-
-    W, H = PHASH_BASE_W, PHASH_BASE_H
-    base = [_phash_gray(3, p) for p in range(W * H)]
-    up = [base[(y // 2) * W + (x // 2)]
-          for y in range(2 * H) for x in range(2 * W)]
-    mb1 = [
-        (1, _encode_bmp_gray(W, H, base)),
-        (2, _encode_bmp_gray(W, H, [v + 10 for v in base])),  # near-dup of 1
-        (3, _encode_bmp_gray(W, H, [_phash_gray(4, p) for p in range(W * H)])),
-    ]
-    mb2 = [
-        (4, _encode_bmp_gray(2 * W, 2 * H, up)),  # near-dup of batch-1's 1
-        (5, _encode_bmp_gray(W, H, [_phash_gray(5, p) for p in range(W * H)])),
-    ]
-    root = f"{ROOT}/media_dedup"
-    shutil.rmtree(root, ignore_errors=True)
-    src = f"{root}/src"
-    for rows in (mb1, mb2):
-        spark.createDataFrame(rows, "doc_id long, media binary").coalesce(
-            1
-        ).write.mode("append").parquet(src)
-    stream = (
-        spark.readStream.schema("doc_id long, media binary")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = start_media_dedup_stream(
-        stream, f"{root}/index", f"{root}/out", f"{root}/ckpt",
-        fingerprint=phash_media,
-    )
-    q.awaitTermination(120)
-    kept = sorted(
-        r.doc_id for r in spark.read.parquet(f"{root}/out").collect()
-    )
-    assert kept == [1, 3, 5]
-    # the index holds exactly the survivors' band rows (4 bands each)
-    idx = spark.read.parquet(f"{root}/index")
-    assert sorted(
-        r.doc_id for r in idx.select("doc_id").distinct().collect()
-    ) == [1, 3, 5]
-    assert idx.count() == 3 * 4
-    # batch equivalence: greedy keep-set of the all-at-once pair join
-    all_fp = phash_media(spark.read.parquet(src))
-    b_side = {
-        r.b_id for r in phash_candidate_pairs(all_fp).collect()
-    }
-    assert kept == sorted({1, 2, 3, 4, 5} - b_side)
-
-
 def test_streaming_anomaly_flags_match_batch(spark):
     """The partial-count index folded across forced micro-batch
     boundaries (one day deliberately SPLIT across two batches) must
