@@ -55,8 +55,9 @@ def main() -> None:
                          "(north_rule threshold 0.95)")
     ap.add_argument("--incremental", action="store_true",
                     help="delta ingest: detect only urls missing from the "
-                         "existing detect checkpoint, append, recompute "
-                         "derived tables")
+                         "existing detect checkpoint and append them; the "
+                         "append's new detect version makes every derived "
+                         "table recompute")
     ap.add_argument("--langs", default=None,
                     help="comma-separated language allowlist (P2 filter, "
                          "pushed into the scan)")

@@ -7,10 +7,12 @@ cluster classpath; the parquet fallback writes a directory + `_manifest.json`
 and is what all tests/bench use. Pipeline code only calls these functions,
 never a hardcoded format.
 
-Checkpoint contract (north_rule: resumable stages): a stage is complete iff
-its manifest exists; `materialize` writes data to a temp dir, then the
-manifest — the manifest write is the atomic commit point, so a killed job
-re-runs an incomplete stage from its inputs (idempotent overwrite).
+Checkpoint contract (north_rule: resumable stages): a stage is done iff its
+manifest exists and records, under `after`, the current `version` of each
+stage it was built from. Every commit (`materialize`; `append`, even of 0
+rows) writes data, then atomically replaces the manifest with a fresh
+version, so a killed job redoes uncommitted work (idempotent overwrite) and
+every stage built from an older upstream version recomputes on resume.
 """
 
 from __future__ import annotations
@@ -18,6 +20,7 @@ from __future__ import annotations
 import json
 import os
 import time
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -149,62 +152,80 @@ class Checkpointer:
     def _manifest(self, stage: str) -> str:
         return os.path.join(self.root, f"{stage}._manifest.json")
 
-    def is_done(self, stage: str) -> bool:
-        return os.path.exists(self._manifest(stage))
+    def _load(self, stage: str) -> dict | None:
+        try:
+            with open(self._manifest(stage)) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            return None
+
+    def _versions(self, stages: tuple[str, ...]) -> dict[str, str | None]:
+        return {s: (self._load(s) or {}).get("version") for s in stages}
+
+    def _write(self, df: DataFrame, stage: str, mode: str) -> int:
+        """Write the stage's data; the row count rides on the write job via
+        the Observation API — no separate count scan per stage."""
+        from pyspark.sql import Observation
+        from pyspark.sql import functions as F
+
+        obs = Observation()
+        # zstd: checkpoints are write-once read-few; smaller files beat
+        # snappy's decode speed when the bottleneck is storage bandwidth
+        write_table(df.observe(obs, F.count(F.lit(1)).alias("rows")),
+                    self._dir(stage), self.fmt, mode=mode, compression="zstd")
+        return obs.get["rows"]
+
+    def _commit(self, stage: str, manifest: dict) -> None:
+        """Stamp a fresh version and atomically replace the manifest."""
+        manifest["version"] = uuid.uuid4().hex
+        tmp = self._manifest(stage) + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(manifest, f)
+        os.replace(tmp, self._manifest(stage))
+
+    def is_done(self, stage: str, after: tuple[str, ...] = ()) -> bool:
+        m = self._load(stage)
+        return m is not None and m.get("after", {}) == self._versions(after)
 
     def read(self, stage: str) -> DataFrame:
         return read_table(self.spark, self._dir(stage), self.fmt)
 
-    def materialize(self, df: DataFrame, stage: str, wall_ms: float | None = None) -> DataFrame:
-        """Write stage output, then atomically commit via manifest; returns
-        the re-read DataFrame (truncates lineage — the Spark-batch analogue
-        of a streaming checkpoint). Row count rides on the write job via the
-        Observation API — no separate count scan per stage."""
-        from pyspark.sql import Observation
-        from pyspark.sql import functions as F
-
+    def materialize(self, df: DataFrame, stage: str, wall_ms: float | None = None,
+                    after: tuple[str, ...] = ()) -> DataFrame:
+        """Write stage output built from the stages `after`, then commit;
+        returns the re-read DataFrame (truncates lineage — the Spark-batch
+        analogue of a streaming checkpoint)."""
         t0 = time.time()
-        obs = Observation()
-        # zstd: checkpoints are write-once read-few; smaller files beat
-        # snappy's decode speed when the bottleneck is storage bandwidth
-        write_table(
-            df.observe(obs, F.count(F.lit(1)).alias("rows")),
-            self._dir(stage),
-            self.fmt,
-            compression="zstd",
-        )
+        built_from = self._versions(after)
+        n = self._write(df, stage, "overwrite")
         out = self.read(stage)
-        n = obs.get["rows"]
-        manifest = {
+        self._commit(stage, {
             "stage": stage,
             "rows": n,
             "schema": out.schema.jsonValue(),
             "format": self.fmt,
             "wall_ms": wall_ms if wall_ms is not None else (time.time() - t0) * 1000.0,
-        }
-        tmp = self._manifest(stage) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._manifest(stage))
+            "after": built_from,
+        })
         return out
 
-    def run_stage(self, stage: str, fn, *inputs: DataFrame) -> DataFrame:
-        """Resume-aware stage execution: skip + read-back when already done."""
-        if self.is_done(stage):
-            return self.read(stage)
+    def run_stage(self, stage: str, fn, *inputs: DataFrame,
+                  after: tuple[str, ...] = ()) -> tuple[DataFrame, bool]:
+        """Read back when done, else compute + materialize; returns
+        (output, whether it was computed)."""
+        if self.is_done(stage, after):
+            return self.read(stage), False
         t0 = time.time()
         df = fn(*inputs)
-        return self.materialize(df, stage, wall_ms=(time.time() - t0) * 1000.0)
+        return self.materialize(df, stage, (time.time() - t0) * 1000.0, after), True
 
     def append(self, df: DataFrame, stage: str) -> int:
         """Delta-ingest append into a completed stage: the write job commits
-        atomically (files appear only on job commit), then the manifest row
-        count is bumped. Returns rows appended. Idempotent under kill:
-        un-committed appends leave no files, and the caller's anti-join
-        derives the delta from the data actually present, not the manifest."""
-        from pyspark.sql import Observation
-        from pyspark.sql import functions as F
-
+        atomically (files appear only on job commit), then the manifest
+        commits the bumped row count under a fresh version. Returns rows
+        appended. Idempotent under kill: un-committed appends leave no
+        files, and the caller's anti-join derives the delta from the data
+        actually present, not the manifest."""
         if self.fmt != "parquet":
             # appending raw parquet files into e.g. an Iceberg table location
             # would corrupt it; route non-parquet formats explicitly when the
@@ -212,32 +233,12 @@ class Checkpointer:
             raise NotImplementedError(
                 f"Checkpointer.append supports fmt='parquet' only, got {self.fmt!r}"
             )
-        obs = Observation()
-        (
-            df.observe(obs, F.count(F.lit(1)).alias("rows"))
-            .write.mode("append")
-            .option("compression", "zstd")
-            .parquet(self._dir(stage))
-        )
-        n_new = obs.get["rows"]
-        with open(self._manifest(stage)) as f:
-            manifest = json.load(f)
+        n_new = self._write(df, stage, "append")
+        manifest = self._load(stage)
         manifest["rows"] += n_new
         manifest["appends"] = manifest.get("appends", 0) + 1
-        tmp = self._manifest(stage) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._manifest(stage))
+        self._commit(stage, manifest)
         return n_new
-
-    def invalidate(self, *stages: str) -> None:
-        """Drop manifests so downstream stages recompute (used after a
-        delta append upstream)."""
-        for stage in stages:
-            try:
-                os.remove(self._manifest(stage))
-            except FileNotFoundError:
-                pass
 
 
 def read_evolved(

@@ -1,6 +1,7 @@
 """Lifecycle C — the full staged pipeline with checkpoint-resume + metrics
 (SURVEY.md §3.4). Each stage is a pure DataFrame→DataFrame function;
-Checkpointer skips completed stages on restart (manifest = commit point).
+Checkpointer skips a stage on restart iff its manifest records the current
+versions of the stages it was built from: `ROOTS`, for every non-root stage.
 
 Stage DAG:
   pages → [extract ∘ detect fused, one narrow Arrow stage] → detections
@@ -49,6 +50,8 @@ from mxsparkg.metrics import append_metrics
 from mxsparkg.skew import repartition_salted
 
 DEFAULT_CHECKPOINT_STAGES = ("detect", "canon_map", "triples", "edges", "nodes")
+# the DAG's roots; every other stage is a deterministic function of them
+ROOTS = ("detect", "canon_map")
 
 
 def run_pipeline(
@@ -59,7 +62,6 @@ def run_pipeline(
     checkpoint_root: str,
     rules: list[dict] | None = None,
     pred_patterns: list[dict] | None = None,
-    n_partitions: int | None = None,
     with_metrics: bool = True,
     salted_repartition: bool = False,
     checkpoint_stages: tuple[str, ...] = DEFAULT_CHECKPOINT_STAGES,
@@ -78,7 +80,6 @@ def run_pipeline(
         )
     ck = Checkpointer(spark, checkpoint_root)
     model_bc = broadcast_model(spark, rules, pred_patterns)
-    npart = n_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     ckset = set(checkpoint_stages)
     timings: dict[str, float] = {}
     metrics_lock = threading.Lock()
@@ -87,10 +88,10 @@ def run_pipeline(
         if name not in ckset:
             return fn(*inputs)
         t0 = time.time()
-        done_before = ck.is_done(name)
-        out = ck.run_stage(name, fn, *inputs)
+        out, computed = ck.run_stage(name, fn, *inputs,
+                                     after=() if name in ROOTS else ROOTS)
         timings[name] = round(time.time() - t0, 2)
-        if with_metrics and not done_before:
+        if with_metrics and computed:
             # serialized: two concurrent append jobs into the same metrics
             # table would race the file-commit protocol
             with metrics_lock:
@@ -132,6 +133,7 @@ def run_pipeline(
     def s_detect(p: DataFrame) -> DataFrame:
         if not salted_repartition:
             return detect_pages(p, model_bc, with_context=with_context)
+        npart = int(spark.conf.get("spark.sql.shuffle.partitions"))
         clean = repartition_salted(
             extract_pages(p), "host", npart, salt_on=["url"]
         )
@@ -161,15 +163,12 @@ def run_pipeline(
     try:
         if incremental and ck.is_done("detect"):
             # delta ingest (J5/T2): detect ONLY urls not in the completed
-            # checkpoint, append, and invalidate the derived tables. At web
-            # scale this is how a grown crawl re-runs without re-tagging
-            # 10^12 already-processed pages.
+            # checkpoint and append them; the append's new detect version
+            # makes every derived stage recompute. At web scale this is how
+            # a grown crawl re-runs without re-tagging 10^12 pages.
             prev_urls = ck.read("detect").select("url").distinct()
             new_pages = pages.join(prev_urls, on="url", how="left_anti")
-            n_new = ck.append(s_detect(new_pages), "detect")
-            if n_new > 0:
-                ck.invalidate("triples", "edges", "nodes", "link_mentions",
-                              "link_triples")
+            ck.append(s_detect(new_pages), "detect")
             detections = ck.read("detect")
         else:
             detections = stage("detect", s_detect, pages)

@@ -353,10 +353,12 @@ def start_geo_match_stream(
     layers per micro-batch:
 
     - vs the INDEX: the new batch's 3x3 cell probes equi-join the
-      index's (pid, coords, cell) parquet — a plain batch hash join per
-      micro-batch, zero streaming state, index arbitrarily large;
+      index's (pid, coords) parquet, its cells computed at the current
+      cell_e6 on read (so a restart may change the grid) — a plain batch
+      hash join per micro-batch, zero streaming state, index arbitrarily
+      large;
     - WITHIN the batch: geo.distance_pairs over the batch itself;
-    - the batch's points + cells APPEND to the index, so later batches
+    - the batch's points APPEND to the index, so later batches
       match against earlier ones exactly once.
 
     Every qualifying pair therefore surfaces EXACTLY once regardless of
@@ -406,7 +408,7 @@ def start_geo_match_stream(
             cross = (
                 _probe_side(cells_new)
                 .join(
-                    idx.select(
+                    _with_cells(idx, cell).select(
                         F.col("pid").alias("pid_b"),
                         F.col("lat_e6").alias("lat_b"),
                         F.col("lon_e6").alias("lon_b"),
@@ -424,7 +426,8 @@ def start_geo_match_stream(
             )
             pairs = pairs.unionByName(cross)
         pairs.write.mode("append").parquet(out_dir)
-        cells_new.write.mode("append").parquet(index_dir)
+        cells_new.select("pid", "lat_e6", "lon_e6").write.mode(
+            "append").parquet(index_dir)
 
     return (
         point_stream.writeStream.foreachBatch(process)

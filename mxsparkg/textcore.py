@@ -18,12 +18,14 @@ from __future__ import annotations
 
 import hashlib
 import re
+from bisect import bisect_left
 
 # --------------------------------------------------------------------------
 # U1 — pinned HTML → text extraction
 # --------------------------------------------------------------------------
 
-_SCRIPT_RE = re.compile(rb"<(script|style)\b[^>]*>.*?</\1\s*>", re.I | re.S)
+_SCRIPT_OPEN_RE = re.compile(rb"<(script|style)\b", re.I)
+_SCRIPT_CLOSE_RE = re.compile(rb"</(script|style)\s*>", re.I)
 _BLOCK_CLOSE_RE = re.compile(
     rb"</(p|div|h[1-6]|li|tr|title|br)\s*>|<br\s*/?>", re.I
 )
@@ -51,15 +53,54 @@ def pinned_extract(html: bytes) -> str:
     """
     if html is None:
         return ""
-    b = _SCRIPT_RE.sub(b"", html)
+    b = _strip_script_style(html)
     b = _BLOCK_CLOSE_RE.sub(b"\n", b)
-    b = _TAG_RE.sub(b"", b)
+    b = _strip_tags(b)
     for ent, rep in _ENTITIES.items():
         b = b.replace(ent, rep)
     b = _NUMENT_RE.sub(lambda m: chr(int(m.group(1))).encode("utf-8"), b)
     text = b.decode("utf-8", errors="replace")
     lines = [ln.strip() for ln in text.split("\n")]
     return "\n".join(ln for ln in lines if ln)
+
+
+def _strip_script_style(b: bytes) -> bytes:
+    r"""Removes what `<(script|style)\b[^>]*>.*?</\1\s*>` (re.I | re.S)
+    matches, in linear time. The regex rescans to the end of the page from
+    every unclosed open tag; here each open tag finds the first `>` after
+    it (shared by a run of open tags, so all those scans cover the page
+    once) and then its close tag by bisecting the close tags' positions,
+    listed once up front."""
+    closes: dict[bytes, tuple[list[int], list[int]]] = {
+        b"script": ([], []), b"style": ([], [])}
+    for m in _SCRIPT_CLOSE_RE.finditer(b):
+        starts, ends = closes[m.group(1).lower()]
+        starts.append(m.start())
+        ends.append(m.end())
+    if not (closes[b"script"][0] or closes[b"style"][0]):
+        return b
+    out, pos, gt = [], 0, -1
+    for m in _SCRIPT_OPEN_RE.finditer(b):
+        if m.start() < pos:  # inside an element already removed
+            continue
+        if gt < m.end():
+            gt = b.find(b">", m.end())
+            if gt < 0:  # no open tag from here on can end
+                break
+        starts, ends = closes[m.group(1).lower()]
+        k = bisect_left(starts, gt + 1)
+        if k < len(starts):
+            out.append(b[pos:m.start()])
+            pos = ends[k]
+    out.append(b[pos:])
+    return b"".join(out)
+
+
+def _strip_tags(b: bytes) -> bytes:
+    """`_TAG_RE.sub(b"", b)` without its quadratic failures: a `<` after
+    the last `>` can never close, so only the prefix up to it is scanned."""
+    end = b.rfind(b">") + 1
+    return _TAG_RE.sub(b"", b[:end]) + b[end:]
 
 
 def html_escape(s: str) -> str:

@@ -115,7 +115,6 @@ def test_partition_invariance(spark, tiny_fixtures, pipeline_result):
         f"{tiny_fixtures}/entity_dict.parquet",
         f"{tiny_fixtures}/gold_canon.parquet",
         f"{one}/ckpt",
-        n_partitions=1,
         with_metrics=False,
     )
     assert _triples(res1["triples"]) == _triples(pipeline_result["triples"])
@@ -250,6 +249,97 @@ def test_fold_triples_equivalence(spark, tiny_fixtures, pipeline_result, tmp_pat
     assert folded["nodes"].count() == pipeline_result["nodes"].count()
     n_support_sum = sum(n for _, _, _, n in fold_edges)
     assert n_support_sum == pipeline_result["triples"].count()
+
+
+class _Killed(Exception):
+    """A simulated job death at one commit step."""
+
+
+class _Crash:
+    """Instruments the pipeline's commit steps — each stage's data write,
+    manifest replace and metrics append — as (step, stage) points, recorded
+    in `seen` in the order they are reached; the point `at` raises before
+    it lands."""
+
+    def __init__(self, monkeypatch):
+        import mxsparkg.catalog as C
+        import mxsparkg.pipeline as P
+
+        self.seen, self.at = [], None
+        for owner, name, step, stage_arg in (
+            (C.Checkpointer, "_write", "data", 2),
+            (C.Checkpointer, "_commit", "manifest", 1),
+            (P, "append_metrics", "metrics", 3),
+        ):
+            monkeypatch.setattr(
+                owner, name, self._point(getattr(owner, name), step, stage_arg)
+            )
+
+    def _point(self, fn, step, stage_arg):
+        def commit_step(*args, **kw):
+            point = (step, args[stage_arg])
+            self.seen.append(point)
+            if point == self.at:
+                raise _Killed(point)
+            return fn(*args, **kw)
+
+        return commit_step
+
+
+def _graph(res):
+    """Distinct triples, edges and nodes of a run, as comparable sets."""
+
+    def rows(df):
+        return {
+            tuple(tuple(v) if isinstance(v, list) else v for v in r)
+            for r in df.collect()
+        }
+
+    return _triples(res["triples"]), rows(res["edges"]), rows(res["nodes"])
+
+
+def test_crash_at_every_commit_point_then_resume(
+    spark, tiny_fixtures, tmp_path, monkeypatch
+):
+    """Kill a full run, and an incremental run over a 300-page checkpoint,
+    at each of its commit points in turn; the resumed run's triples, edges
+    and nodes equal a fresh full run's. The commit points are the ones an
+    uninterrupted run of the same mode reaches."""
+    crash = _Crash(monkeypatch)
+    pages = f"{tiny_fixtures}/pages.parquet"
+    sub = str(tmp_path / "pages_sub.parquet")
+    spark.read.parquet(pages).orderBy("url").limit(300).write.parquet(sub)
+
+    def run(pages_path, ck, incremental=False):
+        return run_pipeline(
+            spark, pages_path, f"{tiny_fixtures}/entity_dict.parquet",
+            f"{tiny_fixtures}/gold_canon.parquet", ck, incremental=incremental,
+        )
+
+    base = str(tmp_path / "base")
+    run(sub, base)
+    want = _graph(run(pages, str(tmp_path / "full")))
+    for incremental in (False, True):
+
+        def fresh(ck):
+            shutil.rmtree(ck, ignore_errors=True)
+            if incremental:
+                shutil.copytree(base, ck)
+            return ck
+
+        crash.seen.clear()
+        assert _graph(run(pages, fresh(str(tmp_path / "clean")),
+                          incremental)) == want
+        points = list(dict.fromkeys(crash.seen))
+        assert ("manifest", "detect") in points, points
+        for point in points:
+            ck = fresh(str(tmp_path / "ck"))
+            crash.at = point
+            with pytest.raises(_Killed):
+                run(pages, ck, incremental)
+            crash.at = None
+            assert _graph(run(pages, ck, incremental)) == want, (
+                incremental, point)
 
 
 def test_zz_resume_after_midpipeline_death(spark, tiny_fixtures, pipeline_result):

@@ -905,49 +905,54 @@ def test_streaming_geo_match_checkpoint_restart(spark):
     """Stopping the geo-match stream and restarting against the SAME
     checkpoint after new files arrive must process only the new files:
     the final pair set equals batch distance_pairs over everything, with
-    no duplicates from re-processing batches 1-2."""
+    no duplicates from re-processing batches 1-2 — also when the restart
+    uses a coarser grid (point 5 sits in grid-1000 cell_x 2, outside the
+    3x3 probe of point 4's grid-3000 cell, so pairs probed against cells
+    stored at the old grid would drop the (4, 5) pair)."""
     from mxsparkg.geo import distance_pairs
     from mxsparkg.streaming import start_geo_match_stream
 
     CELL, R = 1000, 1000
-    root = f"{ROOT}/geo_restart"
-    shutil.rmtree(root, ignore_errors=True)
-    src = f"{root}/src"
+    for restart_cell in (CELL, 3 * CELL):
+        root = f"{ROOT}/geo_restart_{restart_cell}"
+        shutil.rmtree(root, ignore_errors=True)
+        src = f"{root}/src"
 
-    def write(rows):
-        spark.createDataFrame(
-            rows, "pid long, lat_e6 long, lon_e6 long"
-        ).coalesce(1).write.mode("append").parquet(src)
+        def write(rows):
+            spark.createDataFrame(
+                rows, "pid long, lat_e6 long, lon_e6 long"
+            ).coalesce(1).write.mode("append").parquet(src)
 
-    def run():
-        stream = (
-            spark.readStream.schema("pid long, lat_e6 long, lon_e6 long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+        def run(cell):
+            stream = (
+                spark.readStream.schema("pid long, lat_e6 long, lon_e6 long")
+                .option("maxFilesPerTrigger", 1)
+                .parquet(src)
+            )
+            q = start_geo_match_stream(
+                stream, f"{root}/index", f"{root}/out", f"{root}/ckpt",
+                cell_e6=cell, r_e6=R,
+            )
+            q.awaitTermination(120)
+
+        write([(1, 100, 100), (2, 900, 100)])
+        write([(3, 100, 900), (5, 100, 2600)])
+        run(CELL)   # first life: batches 1-2
+        n_first = spark.read.parquet(f"{root}/out").count()
+        write([(4, 900, 2100), (6, 900, 900)])
+        run(restart_cell)   # second life: must pick up ONLY the new file
+        got = sorted(
+            (r.pid_lo, r.pid_hi, r.dist2_e6)
+            for r in spark.read.parquet(f"{root}/out").collect()
         )
-        q = start_geo_match_stream(
-            stream, f"{root}/index", f"{root}/out", f"{root}/ckpt",
-            cell_e6=CELL, r_e6=R,
+        want = sorted(
+            (r.pid_a, r.pid_b, r.dist2_e6)
+            for r in distance_pairs(
+                spark.read.parquet(src), CELL, R
+            ).collect()
         )
-        q.awaitTermination(120)
-
-    write([(1, 100, 100), (2, 900, 100)])
-    write([(3, 100, 900)])
-    run()   # first life: batches 1-2
-    n_first = spark.read.parquet(f"{root}/out").count()
-    write([(4, 900, 900)])
-    run()   # second life: must pick up ONLY the new file
-    got = sorted(
-        (r.pid_lo, r.pid_hi, r.dist2_e6)
-        for r in spark.read.parquet(f"{root}/out").collect()
-    )
-    want = sorted(
-        (r.pid_a, r.pid_b, r.dist2_e6)
-        for r in distance_pairs(
-            spark.read.parquet(src), CELL, R
-        ).collect()
-    )
-    assert got == want          # complete AND duplicate-free
-    assert len(got) > n_first   # the restart did add point 4's pairs
-    idx = spark.read.parquet(f"{root}/index")
-    assert idx.count() == 4 and idx.select("pid").distinct().count() == 4
+        assert got == want, restart_cell   # complete AND duplicate-free
+        assert len(got) > n_first   # the restart did add points 4 and 6
+        assert (4, 5) in {(lo, hi) for lo, hi, _ in got}
+        idx = spark.read.parquet(f"{root}/index")
+        assert idx.count() == 6 and idx.select("pid").distinct().count() == 6
